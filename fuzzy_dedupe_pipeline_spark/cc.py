@@ -33,10 +33,24 @@ instead, trading one distributed write per round for executor-loss recovery.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
+
+
+def _env_edges(name: str, default: int) -> int:
+    """A malformed override must not break the import: warn, keep default."""
+    raw = os.environ.get(name, "").strip()
+    if not raw:
+        return default
+    try:
+        return int(raw)
+    except ValueError:
+        warnings.warn(f"{name}={raw!r} is not an integer; using {default}")
+        return default
+
 
 # Edge sets at or below this size take the driver union-find fast path (see
 # connected_components docstring); 0 disables it. At the default 500k edges
@@ -45,7 +59,7 @@ from pyspark.sql.types import StructField, StructType
 # and the returned relation is one row per NODE, far smaller still. The
 # break-even is where collect throughput (~1 s per few-hundred-k rows)
 # approaches the distributed fixpoint's ~0.6 s/round driver-serial floor.
-DRIVER_CC_MAX_EDGES = int(os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", "500000"))
+DRIVER_CC_MAX_EDGES = _env_edges("SPARK_GRAFT_CC_DRIVER_EDGES", 500_000)
 
 
 def connected_components(

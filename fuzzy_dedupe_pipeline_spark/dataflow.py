@@ -3,35 +3,53 @@
 Same stages as pipeline.DedupePipeline but materializing intermediates to
 session memory (persist/localCheckpoint) instead of parquet — the shape used
 by __spark_entry__ queries and bench.py. DedupePipeline remains the
-production path (resumable, metrics); this is the ad-hoc/query path. Both
-call the identical stage modules, so semantics cannot diverge.
+production path (resumable, metrics); this is the ad-hoc/query path.
+
+The two compositions are not the same graph. This path fuses the LSH and
+substring candidate stages into one chain (candidate_table) and scores its
+table directly (verify.score_candidates), while pipeline.py still runs
+candidate_pairs, substring_candidates and verify_pairs as separate durable
+stages. tests/test_dataflow.py checks that both give the same verified
+edges; declaring the stages once for both paths is still open.
 
 Note dedupe_clusters/dedupe_edges run eager jobs when CALLED (cache builds
-are serialized deliberately — see dedupe_edges); the returned DataFrame's
+are ordered deliberately — see dedupe_edges); the returned DataFrame's
 remaining plan is cheap assembly over checkpointed edges.
 """
 
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import replace
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from fuzzy_dedupe_pipeline_spark.canonical import cluster_output
 from fuzzy_dedupe_pipeline_spark.cc import attach_singletons, connected_components
 from fuzzy_dedupe_pipeline_spark.config import DEFAULT_CONFIG, DedupeConfig
-from fuzzy_dedupe_pipeline_spark.lsh import candidate_pairs
+from fuzzy_dedupe_pipeline_spark.lsh import bucket_pairs
 from fuzzy_dedupe_pipeline_spark.minhash import (
+    LONGS,
+    band_hashes_col,
+    batch_minhash,
+    batch_shingle_sets,
+    lane_seeds,
+    row_lengths,
+    sig_struct,
     simhash_similarity_col,
-    with_signatures,
+    with_sig_udf,
     with_simhash,
     with_verify_sigs,
 )
-from fuzzy_dedupe_pipeline_spark.normalize import normalize_text_col, tokens_raw_col
-from fuzzy_dedupe_pipeline_spark.substring import substring_candidates
-from fuzzy_dedupe_pipeline_spark.verify import verify_pairs
+from fuzzy_dedupe_pipeline_spark.normalize import normalize_text_col
+from fuzzy_dedupe_pipeline_spark.substring import batch_winnow
+from fuzzy_dedupe_pipeline_spark.verify import score_candidates
+
+# element type of candidate_table's tagged bucket keys
+BUCKET_KEYS = "array<struct<band_id:int,band_hash:bigint>>"
 
 
 def clean_docs(
@@ -73,6 +91,68 @@ def exact_edges_df(clean: DataFrame) -> DataFrame:
     )
 
 
+def make_candidate_udf(cfg: DedupeConfig, with_fps: bool = True):
+    """Arrow UDF: token-hash array -> (n_tokens, minhash, fps) — everything
+    candidate generation reads, from ONE pass over the rows: the LSH
+    signature (minhash.batch_minhash over the shingle sets) and the winnowed
+    substring fingerprints (substring.batch_winnow over the same token
+    hashes; empty when with_fps is False). No shingles or simhash cross back:
+    verification recomputes those over the candidate endpoints only."""
+    seeds = lane_seeds(cfg.num_hashes, cfg.seed)
+    k, w, q = cfg.shingle_k, cfg.substring_gram, cfg.winnow_window
+    no_fps = np.empty(0, dtype=np.int64)
+
+    @F.pandas_udf(sig_struct(n_tokens=T.IntegerType(), minhash=LONGS, fps=LONGS))
+    def candidate_sig(token_hashes: pd.Series) -> pd.DataFrame:
+        rows = list(token_hashes)
+        return pd.DataFrame(
+            {
+                "n_tokens": row_lengths(rows),
+                "minhash": list(batch_minhash(batch_shingle_sets(rows, k), seeds)),
+                "fps": batch_winnow(rows, w, q) if with_fps else [no_fps] * len(rows),
+            }
+        )
+
+    return candidate_sig
+
+
+def candidate_table(
+    reps: DataFrame, cfg: DedupeConfig, with_substring: bool = True
+) -> DataFrame:
+    """(id1, id2, substring_match) over reps (id, text_norm): the pairs of
+    lsh.candidate_pairs and substring.substring_candidates, one row per pair,
+    substring_match true iff the pair shares a fingerprint — the table
+    verify_pairs builds with a full outer join of the two pair sets.
+
+    One chain instead of two: one Arrow UDF (make_candidate_udf), then one
+    explode to tagged bucket keys — (band_id, band_hash) for the bands of
+    docs with tokens (band_table's rows), (-1, fp) for each fingerprint — and
+    one count-first bucket enumeration (lsh.bucket_pairs) under the shared
+    cap. Band and fingerprint buckets never share a key, so each is capped
+    exactly as its own stage caps it."""
+    sigs = with_sig_udf(
+        reps, make_candidate_udf(cfg, with_substring), "id", "text_norm"
+    )
+    bands = F.transform(
+        band_hashes_col(F.col("minhash"), cfg),
+        lambda h, i: F.struct(i.alias("band_id"), h.alias("band_hash")),
+    )
+    fps = F.transform(
+        "fps", lambda fp: F.struct(F.lit(-1).alias("band_id"), fp.alias("band_hash"))
+    )
+    keys = F.concat(
+        F.when(F.col("n_tokens") > 0, bands).otherwise(F.array().cast(BUCKET_KEYS)),
+        fps,
+    )
+    rows = sigs.select("id", F.explode(keys).alias("k")).select(
+        "id", "k.band_id", "k.band_hash"
+    )
+    pairs, _ = bucket_pairs(rows, ["band_id", "band_hash"], cfg.max_band_bucket)
+    return pairs.groupBy("id1", "id2").agg(
+        F.bool_or(F.col("band_id") == -1).alias("substring_match")
+    )
+
+
 def dedupe_edges(
     clean_reps: DataFrame,
     cfg: DedupeConfig,
@@ -81,86 +161,35 @@ def dedupe_edges(
 ) -> DataFrame:
     """Verified near-dup edges among exact-representatives.
 
-    Cache discipline (measured at 480k docs, local[32]): columnar-caching the
-    corpus-wide shingle arrays costs ~2x the signature UDF itself (the cache
-    build compresses 100s of MB of variable-length arrays), and any uncached
-    branch re-runs the whole UDF chain. So the persisted signature table
-    keeps ONLY the narrow columns every branch needs (minhash for banding,
-    simhash + n_tokens for verify); shingle sets are recomputed by a second
-    UDF pass over just the candidate-endpoint slice — a small fraction of the
-    corpus after exact-dedup + banding, and exactly the slice the verify
-    joins ship anyway. At 10^12 docs this is the difference between
-    materializing a corpus-sized array column and touching it only where
-    candidates exist.
+    Cache discipline: the corpus-wide pass (candidate_table) keeps nothing —
+    its UDF output is exploded straight into bucket keys, and only the
+    narrow (id1, id2, substring_match) candidate table is persisted, because
+    it feeds both the endpoint slice and the scoring join. Shingle sets are
+    computed by a second UDF pass over just the candidate endpoints — a
+    small fraction of the corpus after exact-dedup + banding, and exactly
+    the slice the verify joins ship anyway (at 10^12 docs, the difference
+    between materializing a corpus-sized array column and touching it only
+    where candidates exist). That slice is persisted and counted before
+    scoring, which reads it twice (a/b sides): counted first, the scoring
+    join's stages read a populated cache instead of racing to build it
+    (each racing stage would rerun the UDF).
 
     persists: caller-owned registry of persisted frames; the caller unpersists
     them once the result is materialized (see dedupe_clusters)."""
-    reps = clean_reps.select(F.col("id").alias("url"), "text_norm")
-    sigs_small = (
-        with_signatures(reps, cfg, id_col="url", text_col="text_norm")
-        .drop("shingles")
-        .persist()
-    )
-    if persists is not None:
-        persists.append(sigs_small)
-    # Eager materialization of each cached stage, ordered by DEPENDENCY.
-    # Without explicit materialization, one big checkpoint job materializes
-    # every branch at once and AQE runs independent query stages concurrently
-    # — stages racing for the SAME not-yet-populated cache each recompute its
-    # full lineage (the signature UDF chain ran up to 3x in profiles). The
-    # shared upstream (sigs_small) is therefore counted FIRST; but the two
-    # pair tables below have disjoint uncached lineages over that populated
-    # cache, so their builds run CONCURRENTLY (two threads) — the cache race
-    # cannot bite, and two of the ~150 driver-serial jobs that dominate
-    # high-core runs overlap instead of queueing.
-    sigs_small.count()
-    lsh_pairs, _ = candidate_pairs(sigs_small, cfg, persists=persists)
-    # the pair tables feed three consumers each (two end_ids branches + the
-    # verify join) — persist the narrow (id1, id2) rows, not the wide inputs
-    lsh_pairs = lsh_pairs.persist()
-    if persists is not None:
-        persists.append(lsh_pairs)
-    if with_substring:
-        toks = clean_reps.select(
-            "id", tokens_raw_col(F.col("text_norm")).alias("tokens")
-        )
-        sub_pairs, _ = substring_candidates(toks, cfg, persists=persists)
-        sub_pairs = sub_pairs.persist()
-        if persists is not None:
-            persists.append(sub_pairs)
-        with ThreadPoolExecutor(2) as ex:
-            for f in [ex.submit(lsh_pairs.count), ex.submit(sub_pairs.count)]:
-                f.result()
-    else:
-        sub_pairs = lsh_pairs.limit(0)
-        lsh_pairs.count()
-    # second signature pass over candidate endpoints only — the prefilter
-    # semi-join now happens BEFORE the UDF, so verify_pairs' own prefilter
-    # is redundant (the slice is already minimal). Persisted because the
-    # verify scoring join reads it twice (a/b sides). r6: the pass computes
-    # ONLY (shingles, simhash) — verify_pairs never reads the 128 MinHash
-    # lanes, so the lane loop (the UDF's dominant compute) is skipped
-    # (with_verify_sigs; identical shingle sets and fingerprints).
+    reps = clean_reps.select("id", "text_norm")
+    cand = candidate_table(reps, cfg, with_substring).persist()
     end_ids = (
-        lsh_pairs.select(F.col("id1").alias("id"))
-        .union(lsh_pairs.select(F.col("id2").alias("id")))
-        .union(sub_pairs.select(F.col("id1").alias("id")))
-        .union(sub_pairs.select(F.col("id2").alias("id")))
+        cand.select(F.col("id1").alias("id"))
+        .union(cand.select(F.col("id2").alias("id")))
         .distinct()
     )
     sigs_verify = with_verify_sigs(
-        clean_reps.join(end_ids, "id", "left_semi").select(
-            F.col("id").alias("url"), "text_norm"
-        ),
-        cfg,
-        id_col="url",
-        text_col="text_norm",
+        reps.join(end_ids, "id", "left_semi"), cfg, "id", "text_norm"
     ).persist()
-    sigs_verify.count()
     if persists is not None:
-        persists.append(sigs_verify)
-    vcfg = replace(cfg, verify_prefilter=False)
-    return verify_pairs(lsh_pairs, sub_pairs, sigs_verify, cfg=vcfg, persists=persists)
+        persists.extend([cand, sigs_verify])
+    sigs_verify.count()
+    return score_candidates(cand, sigs_verify, cfg)
 
 
 def dedupe_clusters(
@@ -179,7 +208,7 @@ def dedupe_clusters(
     rebalance_input round-robin-repartitions the corpus to the session's
     default parallelism before the signature stages. Source layout is not to
     be trusted: a single unsplittable parquet row group puts EVERY row in one
-    partition and serializes all three Arrow-UDF passes onto one core (file
+    partition and serializes both Arrow-UDF passes onto one core (file
     splits exist but only the one containing the row-group start gets rows).
     One cheap shuffle of the text buys guaranteed balance; disable it only
     when the input is known well-partitioned (e.g. a bucketed Iceberg table).

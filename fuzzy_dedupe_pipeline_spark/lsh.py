@@ -3,22 +3,24 @@
 Replaces the reference's FAISS exact top-k self-join
 (dedupe_logic/processor.py:120-138). Banding hash-partitions the band table
 by (band_id, band_hash) once and enumerates pairs inside each bucket
-(value-identical to the former band self-join, one exchange instead of
-three); unlike the reference's k=min(10,n) cap (processor.py:137), recall is
-governed by the (bands x rows) S-curve:
+(bucket_pairs, value-identical to the former band self-join with one
+exchange instead of three; the substring stage and the fused session front
+end use the same helper). Unlike the reference's k=min(10,n) cap
+(processor.py:137), recall is governed by the (bands x rows) S-curve:
 P(candidate | J=0.8) = 1-(1-0.8^4)^32 > 1 - 6e-8.
 
 Skew: boilerplate-heavy corpora produce hot (band_id, band_hash) buckets whose
-pair blowup is O(m^2). Buckets larger than cfg.max_band_bucket are excluded
-from pair generation and *logged* (returned as a dropped-buckets DataFrame the
-pipeline writes to metrics) — the north rule's explicit skew handling. Exact
-duplicates never reach here (the pipeline collapses them first), so oversized
-buckets are genuinely pathological keys, not normal data.
+pair blowup is O(m^2). Buckets larger than cfg.max_band_bucket are counted,
+excluded from pair generation before any array is built, and *logged*
+(returned as a dropped-buckets DataFrame the pipeline writes to metrics) —
+the north rule's explicit skew handling. Exact duplicates never reach here
+(the pipeline collapses them first), so oversized buckets are genuinely
+pathological keys, not normal data.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from fuzzy_dedupe_pipeline_spark.config import DedupeConfig
@@ -41,6 +43,57 @@ def band_table(sigs: DataFrame, cfg: DedupeConfig) -> DataFrame:
     )
 
 
+def bucket_pairs(
+    rows: DataFrame, keys: list[str], cap: int
+) -> tuple[DataFrame, DataFrame]:
+    """Ordered pairs of ids sharing a bucket, over rows (id, *keys) with one
+    row per (bucket, member).
+
+    Returns (pairs(*keys, id1, id2), dropped(*keys, bucket_size)): pairs with
+    id1 < id2 inside every bucket of 2..cap members, NOT distinct across
+    buckets (callers dedupe or aggregate per pair); dropped lists every bucket
+    over the cap.
+
+    Count first: a window count over the bucket key tags every row with its
+    bucket size, and rows of buckets over the cap are filtered out BEFORE the
+    collect_list, so no hot bucket ever builds an array (the window buffers a
+    group in Spark's spillable row buffer, not in one array value). The
+    collect_list aggregate reuses the window's hash partitioning: the rows
+    cross ONE exchange. Per-task state is O(cap) per array.
+
+    Enumeration: for every j >= 1, id2 = ids[j] pairs with each id1 in
+    ids[0..j-1]. With ids ascending (array_sort's string ordering is the
+    same binary comparison as `<`) this is {id1 < id2}; the filter only
+    removes self-pairs of an id repeated in one bucket. slice keeps per-row
+    state O(bucket), never a flattened O(bucket^2) array. Outer explodes:
+    both arrays are provably non-empty, and the non-outer form would make
+    InferFiltersFromGenerate push size()>0 predicates below the exchange.
+
+    dropped is its own count aggregate over rows (never run unless read);
+    cache rows if both outputs are read.
+    """
+    sized = rows.withColumn(
+        "bucket_size", F.count("*").over(Window.partitionBy(*keys))
+    )
+    buckets = (
+        sized.filter((F.col("bucket_size") <= cap) & (F.col("bucket_size") >= 2))
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
+    )
+    ex2 = buckets.select(
+        *keys, "ids", F.posexplode_outer("ids").alias("_j", "id2")
+    ).filter(F.col("_j") >= 1)
+    pairs = ex2.select(
+        *keys, F.explode_outer(F.slice("ids", 1, F.col("_j"))).alias("id1"), "id2"
+    ).filter(F.col("id1") < F.col("id2"))
+    dropped = (
+        rows.groupBy(*keys)
+        .agg(F.count("*").alias("bucket_size"))
+        .filter(F.col("bucket_size") > cap)
+    )
+    return pairs, dropped
+
+
 def candidate_pairs(
     sigs: DataFrame, cfg: DedupeConfig, persists: list | None = None
 ) -> tuple[DataFrame, DataFrame]:
@@ -50,55 +103,16 @@ def candidate_pairs(
     (band_id, band_hash, bucket_size) for every bucket excluded by the skew
     cap — the caller persists it to the metrics/lineage table.
 
-    persists: caller-owned registry — every frame this function persists is
-    appended so the caller can unpersist once results are materialized
-    (long-lived sessions: streaming micro-batches, repeated bench runs).
+    persists: accepted for call-site symmetry with the other stages (caller-
+    owned registry of persisted frames, unpersisted once results are
+    materialized); this stage persists nothing.
 
-    Shape (r6): ONE shuffle of the band table. The old form (bucket-size
-    aggregate + broadcast anti-join + band self-join) moved the 32x-corpus
-    band rows through three exchanges to emit a pair set that is tiny after
-    exact-dedup; grouping each (band_id, band_hash) bucket once and
-    enumerating in-bucket pairs from the sorted id array produces the
-    identical (id1 < id2, distinct) set with a single hash exchange plus
-    the pair distinct. The bucket arrays are bounded by cfg.max_band_bucket
-    (oversized buckets are dropped BEFORE enumeration, exactly as before),
-    so per-task state is O(cap), and a bucket's pairs were produced by one
-    task under the equi-join too — same skew profile, same cap control.
+    Shape: one exchange of the band table (count-first bucket enumeration,
+    see bucket_pairs) plus the pair distinct, where the former band
+    self-join moved the 32x-corpus band rows through three exchanges.
     """
-    buckets = (
-        band_table(sigs, cfg)
-        .groupBy("band_id", "band_hash")
-        .agg(
-            F.array_sort(F.collect_list("id")).alias("ids"),
-            F.count("*").alias("bucket_size"),
-        )
-        .persist()
+    pairs, dropped = bucket_pairs(
+        band_table(sigs, cfg), ["band_id", "band_hash"], cfg.max_band_bucket
     )
-    if persists is not None:
-        persists.append(buckets)
-    dropped = buckets.filter(
-        F.col("bucket_size") > cfg.max_band_bucket
-    ).select("band_id", "band_hash", "bucket_size")
-    ok = buckets.filter(
-        (F.col("bucket_size") <= cfg.max_band_bucket)
-        & (F.col("bucket_size") >= 2)
-    )
-    # Enumerate ordered pairs per bucket: for every j >= 1, id2 = ids[j]
-    # pairs with each id1 in ids[0..j-1] — with ids ascending (array_sort's
-    # string ordering is the same binary comparison as the `<` operator and
-    # ids are distinct within a bucket), this is exactly {id1 < id2}
-    # (reference J2 ordered-pair guard). slice keeps per-row state O(bucket),
-    # never a flattened O(bucket^2) array. Outer explodes: both arrays are
-    # provably non-empty, and the non-outer form would make
-    # InferFiltersFromGenerate push size()>0 predicates below the exchange.
-    ex2 = ok.select(
-        "ids", F.posexplode_outer("ids").alias("_j", "id2")
-    ).filter(F.col("_j") >= 1)
-    pairs = (
-        ex2.select(
-            F.explode_outer(F.slice("ids", 1, F.col("_j"))).alias("id1"), "id2"
-        )
-        .dropDuplicates(["id1", "id2"])  # multi-band collisions (reference J2 set)
-        .select("id1", "id2")
-    )
-    return pairs, dropped
+    # multi-band collisions (reference J2 set)
+    return pairs.select("id1", "id2").dropDuplicates(["id1", "id2"]), dropped

@@ -125,108 +125,113 @@ def batch_shingle_sets(token_hash_rows: list[np.ndarray], k: int) -> list[np.nda
     return out
 
 
+# --- batch signatures (vectorized) ---------------------------------------------
+
+# Rows are processed in chunks of at most this many shingles (256 KB) so a
+# lane's or a bit's temporaries stay L2-CACHE-RESIDENT. The naive form (each of
+# 128 lanes remixes the WHOLE batch's flat shingle vector) allocates ~6
+# full-batch temporaries per lane — at a 4096-doc batch that is gigabytes of
+# DRAM traffic per batch, and the signature stage becomes memory-bandwidth-
+# bound: measured per-TASK time barely dropped when the corpus split across 4x
+# more tasks (43.6s med @ 8 tasks -> 34.5s med @ 32 tasks on 1/4 the rows),
+# because 32 concurrent tasks saturate one memory controller. Chunked, the
+# loops re-read cache-hot data, DRAM sees ~one pass over the batch, and the
+# stage scales with cores again.
+_CHUNK = 1 << 15
+_EMPTY_LANE = np.iinfo(np.int64).max  # every lane of an empty set's MinHash
+LONGS = T.ArrayType(T.LongType())
+
+
+def _cache_chunks(shingle_rows: list[np.ndarray]):
+    """Yield (rows, flat, starts, lens) per cache-sized chunk of a batch's
+    NON-EMPTY rows: their batch indices, the chunk's flat uint64 shingle
+    hashes, each row's start offset into that slice, and each row's length."""
+    n_rows = len(shingle_rows)
+    lens = row_lengths(shingle_rows).astype(np.int64)
+    if not lens.any():
+        return
+    flat = np.concatenate(shingle_rows).view(_U64)
+    cum = np.cumsum(lens)
+    r0 = 0
+    while r0 < n_rows:
+        base = cum[r0 - 1] if r0 else 0
+        r1 = int(np.searchsorted(cum, base + _CHUNK, side="left")) + 1
+        r1 = min(max(r1, r0 + 1), n_rows)
+        lens_c = lens[r0:r1]
+        ne = lens_c > 0
+        if ne.any():
+            starts = (cum[r0:r1] - lens_c - base)[ne]
+            yield np.arange(r0, r1)[ne], flat[base : cum[r1 - 1]], starts, lens_c[ne]
+        r0 = r1
+
+
+def batch_minhash(shingle_rows: list[np.ndarray], seeds: np.ndarray) -> np.ndarray:
+    """(rows, lanes) int64 MinHash signatures: each lane is one splitmix64
+    re-mix of the shingle hashes + np.minimum.reduceat over row offsets.
+    Rows with no shingles get every lane MAX."""
+    sigs = np.full((len(shingle_rows), seeds.size), _EMPTY_LANE, dtype=np.int64)
+    with np.errstate(over="ignore"):
+        for rows, flat, starts, _ in _cache_chunks(shingle_rows):
+            lane_min = np.empty((rows.size, seeds.size), dtype=_U64)
+            for j, s in enumerate(seeds):
+                lane_min[:, j] = np.minimum.reduceat(_splitmix64(flat ^ s), starts)
+            sigs[rows] = lane_min.view(np.int64)
+    return sigs
+
+
+def batch_simhash(shingle_rows: list[np.ndarray]) -> np.ndarray:
+    """int64 SimHash per row: per-bit majority vote over the shingle hashes
+    via np.add.reduceat. Rows with no shingles get 0."""
+    packed = np.zeros(len(shingle_rows), dtype=_U64)
+    for rows, flat, starts, lens in _cache_chunks(shingle_rows):
+        n = lens.view(_U64)
+        vote = np.zeros(rows.size, dtype=_U64)
+        for b in range(64):
+            ones = np.add.reduceat((flat >> _U64(b)) & _U64(1), starts)
+            vote |= (ones * _U64(2) > n).astype(_U64) << _U64(b)
+        packed[rows] = vote
+    return packed.view(np.int64)
+
+
+def row_lengths(rows: list) -> np.ndarray:
+    return np.fromiter((len(r) for r in rows), dtype=np.int32, count=len(rows))
+
+
+def sig_struct(**fields: T.DataType) -> T.StructType:
+    """Non-null struct return type of a signature UDF."""
+    return T.StructType([T.StructField(n, t, False) for n, t in fields.items()])
+
+
+# --- signature UDFs ------------------------------------------------------------
+#
+# Each UDF maps a token-hash array to the struct its consumers read, and
+# computes only that: shingle construction is one rolling-hash pass over the
+# flattened Arrow batch (batch_shingle_sets), and batch_minhash /
+# batch_simhash are the only lane loop and bit vote. The only per-row Python
+# is np.unique + output assembly.
+
+
 def make_signature_udf(cfg: DedupeConfig):
-    """Arrow UDF: token-hash array -> (shingles array<long>, minhash
-    array<long>, simhash long).
-
-    Vectorized across the whole Arrow batch: shingle construction is one
-    rolling-hash pass over the flattened batch; each MinHash lane is one
-    splitmix64 re-mix + np.minimum.reduceat over row offsets; SimHash is a
-    per-bit majority vote via np.add.reduceat. The only per-row Python is
-    np.unique + output assembly.
-    """
+    """Arrow UDF: token-hash array -> (n_tokens, shingles, minhash, simhash)."""
     seeds = lane_seeds(cfg.num_hashes, cfg.seed)
-    num_hashes = cfg.num_hashes
     k = cfg.shingle_k
-    empty_sig = np.full(num_hashes, np.iinfo(np.int64).max, dtype=np.int64)
 
-    ret = T.StructType(
-        [
-            T.StructField("n_tokens", T.IntegerType(), False),
-            T.StructField("shingles", T.ArrayType(T.LongType()), False),
-            T.StructField("minhash", T.ArrayType(T.LongType()), False),
-            T.StructField("simhash", T.LongType(), False),
-        ]
+    @F.pandas_udf(
+        sig_struct(
+            n_tokens=T.IntegerType(), shingles=LONGS, minhash=LONGS, simhash=T.LongType()
+        )
     )
-
-    @F.pandas_udf(ret)
     def signature(token_hashes: pd.Series) -> pd.DataFrame:
-        n_rows = len(token_hashes)
         rows = list(token_hashes)
+        shingle_rows = batch_shingle_sets(rows, k)
         # n_tokens computed here, NOT as a separate F.size(tokens) projection —
         # that would duplicate the whole normalize/tokenize chain in the plan
-        n_tokens = np.fromiter((len(r) for r in rows), dtype=np.int32, count=n_rows)
-        shingle_rows = batch_shingle_sets(rows, k)
-        lens = np.fromiter((len(s) for s in shingle_rows), dtype=np.int64, count=n_rows)
-        total = int(lens.sum())
-        if total == 0:
-            return pd.DataFrame(
-                {
-                    "n_tokens": n_tokens,
-                    "shingles": shingle_rows,
-                    "minhash": [empty_sig] * n_rows,
-                    "simhash": np.zeros(n_rows, dtype=np.int64),
-                }
-            )
-        flat = np.concatenate(shingle_rows).view(_U64)
-        offsets = np.zeros(n_rows, dtype=np.int64)
-        np.cumsum(lens[:-1], out=offsets[1:])
-        nonempty = lens > 0
-
-        # Chunked over rows so every lane's temporaries are L2-CACHE-RESIDENT.
-        # The naive form (each of 128 lanes remixes the WHOLE batch's flat
-        # shingle vector) allocates ~6 full-batch temporaries per lane — at a
-        # 4096-doc batch that is gigabytes of DRAM traffic per batch, and the
-        # signature stage becomes memory-bandwidth-bound: measured per-TASK
-        # time barely dropped when the corpus split across 4x more tasks
-        # (43.6s med @ 8 tasks -> 34.5s med @ 32 tasks on 1/4 the rows),
-        # because 32 concurrent tasks saturate one memory controller. With
-        # <=32k-shingle chunks (256 KB) the lane loop re-reads cache-hot data
-        # and DRAM sees ~one pass over the batch; the stage scales with cores
-        # again.
-        CHUNK = 1 << 15
-        cum = np.cumsum(lens)
-        sigs = np.empty((n_rows, num_hashes), dtype=np.int64)
-        sigs[~nonempty] = empty_sig
-        packed = np.zeros(n_rows, dtype=np.uint64)
-
-        with np.errstate(over="ignore"):
-            r0 = 0
-            while r0 < n_rows:
-                base = cum[r0 - 1] if r0 else 0
-                r1 = int(np.searchsorted(cum, base + CHUNK, side="left")) + 1
-                r1 = min(max(r1, r0 + 1), n_rows)
-                lens_c = lens[r0:r1]
-                ne_c = lens_c > 0
-                if not ne_c.any():
-                    r0 = r1
-                    continue
-                fchunk = flat[base : base + int(lens_c.sum())]
-                rel_off = (offsets[r0:r1] - base)[ne_c]
-                lane_min = np.empty((rel_off.size, num_hashes), dtype=np.uint64)
-                for j in range(num_hashes):
-                    mixed = _splitmix64(fchunk ^ seeds[j])
-                    lane_min[:, j] = np.minimum.reduceat(mixed, rel_off)
-                out_rows = np.arange(r0, r1)[ne_c]
-                sigs[out_rows] = lane_min.view(np.int64)
-
-                # SimHash majority vote, same cache-resident chunk
-                ne_lens = lens_c[ne_c].view(_U64)
-                packed_ne = np.zeros(rel_off.size, dtype=_U64)
-                for b in range(64):
-                    ones = np.add.reduceat(
-                        (fchunk >> _U64(b)) & _U64(1), rel_off
-                    )
-                    packed_ne |= (ones * _U64(2) > ne_lens).astype(_U64) << _U64(b)
-                packed[out_rows] = packed_ne
-                r0 = r1
-
         return pd.DataFrame(
             {
-                "n_tokens": n_tokens,
+                "n_tokens": row_lengths(rows),
                 "shingles": shingle_rows,
-                "minhash": list(sigs),
-                "simhash": packed.view(np.int64),
+                "minhash": list(batch_minhash(shingle_rows, seeds)),
+                "simhash": batch_simhash(shingle_rows),
             }
         )
 
@@ -234,133 +239,63 @@ def make_signature_udf(cfg: DedupeConfig):
 
 
 def make_simhash_udf(cfg: DedupeConfig):
-    """Arrow UDF: token-hash array -> (n_shingles int, simhash long).
+    """Arrow UDF: token-hash array -> (n_shingles, simhash).
 
-    The simhash-only projection of make_signature_udf: identical shingle sets
-    (batch_shingle_sets, same k) and the identical per-bit majority vote, with
-    the 128-lane MinHash loop skipped AND the Arrow payload reduced to 12
-    bytes/row (no shingle or minhash arrays cross the Arrow boundary).
-    Callers that need only the fingerprint — simhash_near_dup_pairs bands on
-    (chunk_id, chunk_val) and re-reads nothing else — pay for only the
-    fingerprint. Bit votes are chunked to L2 like the full UDF, so the stage
-    stays CPU-bound at high core counts.
-    """
+    For callers that need only the fingerprint (simhash_near_dup_pairs bands
+    on it and re-reads nothing else): the lane loop is skipped and 12
+    bytes/row cross the Arrow boundary."""
     k = cfg.shingle_k
-    ret = T.StructType(
-        [
-            T.StructField("n_shingles", T.IntegerType(), False),
-            T.StructField("simhash", T.LongType(), False),
-        ]
-    )
 
-    @F.pandas_udf(ret)
+    @F.pandas_udf(sig_struct(n_shingles=T.IntegerType(), simhash=T.LongType()))
     def simhash_sig(token_hashes: pd.Series) -> pd.DataFrame:
-        rows = list(token_hashes)
-        n_rows = len(rows)
-        shingle_rows = batch_shingle_sets(rows, k)
-        lens = np.fromiter((len(s) for s in shingle_rows), dtype=np.int64, count=n_rows)
-        packed = np.zeros(n_rows, dtype=_U64)
-        total = int(lens.sum())
-        if total:
-            flat = np.concatenate(shingle_rows).view(_U64)
-            offsets = np.zeros(n_rows, dtype=np.int64)
-            np.cumsum(lens[:-1], out=offsets[1:])
-            cum = np.cumsum(lens)
-            CHUNK = 1 << 15
-            with np.errstate(over="ignore"):
-                r0 = 0
-                while r0 < n_rows:
-                    base = cum[r0 - 1] if r0 else 0
-                    r1 = int(np.searchsorted(cum, base + CHUNK, side="left")) + 1
-                    r1 = min(max(r1, r0 + 1), n_rows)
-                    lens_c = lens[r0:r1]
-                    ne_c = lens_c > 0
-                    if not ne_c.any():
-                        r0 = r1
-                        continue
-                    fchunk = flat[base : base + int(lens_c.sum())]
-                    rel_off = (offsets[r0:r1] - base)[ne_c]
-                    ne_lens = lens_c[ne_c].view(_U64)
-                    packed_ne = np.zeros(rel_off.size, dtype=_U64)
-                    for b in range(64):
-                        ones = np.add.reduceat(
-                            (fchunk >> _U64(b)) & _U64(1), rel_off
-                        )
-                        packed_ne |= (ones * _U64(2) > ne_lens).astype(_U64) << _U64(b)
-                    packed[np.arange(r0, r1)[ne_c]] = packed_ne
-                    r0 = r1
+        shingle_rows = batch_shingle_sets(list(token_hashes), k)
         return pd.DataFrame(
-            {
-                "n_shingles": lens.astype(np.int32),
-                "simhash": packed.view(np.int64),
-            }
+            {"n_shingles": row_lengths(shingle_rows), "simhash": batch_simhash(shingle_rows)}
         )
 
     return simhash_sig
 
 
 def make_verify_udf(cfg: DedupeConfig):
-    """Arrow UDF: token-hash array -> (shingles array<long>, simhash long).
-
-    The verify-slice projection of make_signature_udf (r6): verify_pairs
-    reads ONLY the shingle sets (Jaccard/containment) and the simhash
-    fingerprint — the 128 MinHash lanes the full UDF computes were thrown
-    away on the second (candidate-endpoint) signature pass. Shingles and
-    simhash come from the identical batch_shingle_sets + bit-vote code, so
-    the verify scores are unchanged; the lane loop — the UDF's dominant
-    compute — is simply skipped.
-    """
+    """Arrow UDF: token-hash array -> (shingles, simhash) — exactly what
+    verify scoring reads (Jaccard/containment and the secondary signal); the
+    128 MinHash lanes, the dominant compute, are never computed."""
     k = cfg.shingle_k
-    ret = T.StructType(
-        [
-            T.StructField("shingles", T.ArrayType(T.LongType()), False),
-            T.StructField("simhash", T.LongType(), False),
-        ]
-    )
 
-    @F.pandas_udf(ret)
+    @F.pandas_udf(sig_struct(shingles=LONGS, simhash=T.LongType()))
     def verify_sig(token_hashes: pd.Series) -> pd.DataFrame:
-        rows = list(token_hashes)
-        n_rows = len(rows)
-        shingle_rows = batch_shingle_sets(rows, k)
-        lens = np.fromiter(
-            (len(s) for s in shingle_rows), dtype=np.int64, count=n_rows
-        )
-        packed = np.zeros(n_rows, dtype=_U64)
-        total = int(lens.sum())
-        if total:
-            flat = np.concatenate(shingle_rows).view(_U64)
-            offsets = np.zeros(n_rows, dtype=np.int64)
-            np.cumsum(lens[:-1], out=offsets[1:])
-            cum = np.cumsum(lens)
-            CHUNK = 1 << 15
-            with np.errstate(over="ignore"):
-                r0 = 0
-                while r0 < n_rows:
-                    base = cum[r0 - 1] if r0 else 0
-                    r1 = int(np.searchsorted(cum, base + CHUNK, side="left")) + 1
-                    r1 = min(max(r1, r0 + 1), n_rows)
-                    lens_c = lens[r0:r1]
-                    ne_c = lens_c > 0
-                    if not ne_c.any():
-                        r0 = r1
-                        continue
-                    fchunk = flat[base : base + int(lens_c.sum())]
-                    rel_off = (offsets[r0:r1] - base)[ne_c]
-                    ne_lens = lens_c[ne_c].view(_U64)
-                    packed_ne = np.zeros(rel_off.size, dtype=_U64)
-                    for b in range(64):
-                        ones = np.add.reduceat(
-                            (fchunk >> _U64(b)) & _U64(1), rel_off
-                        )
-                        packed_ne |= (ones * _U64(2) > ne_lens).astype(_U64) << _U64(b)
-                    packed[np.arange(r0, r1)[ne_c]] = packed_ne
-                    r0 = r1
+        shingle_rows = batch_shingle_sets(list(token_hashes), k)
         return pd.DataFrame(
-            {"shingles": shingle_rows, "simhash": packed.view(np.int64)}
+            {"shingles": shingle_rows, "simhash": batch_simhash(shingle_rows)}
         )
 
     return verify_sig
+
+
+def with_sig_udf(
+    pages: DataFrame,
+    sig_udf,
+    id_col: str = "url",
+    text_col: str = "text_norm",
+    pre_normalized: bool = True,
+) -> DataFrame:
+    """id + every field of sig_udf's struct, computed over text_col's token
+    hashes. pre_normalized: text_col already went through normalize_text_col
+    (normalization is idempotent, so skipping it only removes two regex
+    passes per doc); pass False for raw text."""
+    toks = tokens_raw_col(F.col(text_col)) if pre_normalized else tokens_col(
+        F.col(text_col)
+    )
+    return (
+        pages.select(
+            F.col(id_col).alias("id"),
+            token_hashes_col(toks).alias("token_hashes"),
+        )
+        .withColumn("sig", sig_udf(F.col("token_hashes")))
+        .select(
+            "id", *[F.col(f"sig.{f}").alias(f) for f in sig_udf.returnType.names]
+        )
+    )
 
 
 def with_verify_sigs(
@@ -369,23 +304,9 @@ def with_verify_sigs(
     id_col: str = "url",
     text_col: str = "text_norm",
 ) -> DataFrame:
-    """id, shingles, simhash — exactly the columns verify_pairs consumes
+    """id, shingles, simhash — exactly the columns verify scoring consumes
     (see make_verify_udf). Input text must be pre-normalized."""
-    sig_udf = make_verify_udf(cfg)
-    return (
-        pages.select(
-            F.col(id_col).alias("id"),
-            token_hashes_col(tokens_raw_col(F.col(text_col))).alias(
-                "token_hashes"
-            ),
-        )
-        .withColumn("sig", sig_udf(F.col("token_hashes")))
-        .select(
-            "id",
-            F.col("sig.shingles").alias("shingles"),
-            F.col("sig.simhash").alias("simhash"),
-        )
-    )
+    return with_sig_udf(pages, make_verify_udf(cfg), id_col, text_col)
 
 
 def with_simhash(
@@ -397,22 +318,7 @@ def with_simhash(
 ) -> DataFrame:
     """id, n_shingles, simhash — the narrow twin of with_signatures for
     consumers that never touch minhash/shingles (see make_simhash_udf)."""
-    sig_udf = make_simhash_udf(cfg)
-    toks = tokens_raw_col(F.col(text_col)) if pre_normalized else tokens_col(
-        F.col(text_col)
-    )
-    return (
-        pages.select(
-            F.col(id_col).alias("id"),
-            token_hashes_col(toks).alias("token_hashes"),
-        )
-        .withColumn("sig", sig_udf(F.col("token_hashes")))
-        .select(
-            "id",
-            F.col("sig.n_shingles").alias("n_shingles"),
-            F.col("sig.simhash").alias("simhash"),
-        )
-    )
+    return with_sig_udf(pages, make_simhash_udf(cfg), id_col, text_col, pre_normalized)
 
 
 def with_signatures(
@@ -424,33 +330,12 @@ def with_signatures(
 ) -> DataFrame:
     """id, n_tokens, shingles, minhash, simhash for every page.
 
-    pre_normalized: text_col already went through normalize_text_col (the
-    standard dataflow — clean_docs runs first). Normalization is idempotent,
-    so skipping the re-normalize only removes two regex passes per doc from
-    the plan, not any semantics. Pass False for raw text.
-
     Docs with zero shingles are kept here (callers filter before banding so
     empty docs can't flood LSH buckets).
     """
-    sig_udf = make_signature_udf(cfg)
-    toks = tokens_raw_col(F.col(text_col)) if pre_normalized else tokens_col(
-        F.col(text_col)
+    return with_sig_udf(
+        pages, make_signature_udf(cfg), id_col, text_col, pre_normalized
     )
-    out = (
-        pages.select(
-            F.col(id_col).alias("id"),
-            token_hashes_col(toks).alias("token_hashes"),
-        )
-        .withColumn("sig", sig_udf(F.col("token_hashes")))
-        .select(
-            "id",
-            F.col("sig.n_tokens").alias("n_tokens"),
-            F.col("sig.shingles").alias("shingles"),
-            F.col("sig.minhash").alias("minhash"),
-            F.col("sig.simhash").alias("simhash"),
-        )
-    )
-    return out
 
 
 def band_hashes_col(minhash: Column, cfg: DedupeConfig) -> Column:

@@ -8,7 +8,7 @@ Local Algorithms for Document Fingerprinting", SIGMOD'03): hash every
 hash in each window of `winnow_window` consecutive gram hashes. Guarantee: any
 shared token run of length >= gram + winnow_window - 1 (default 35+16-1 = 50)
 yields at least one shared fingerprint — exactly the planted >=50-token-run
-family. Fingerprint equality is then an equi-join, like LSH bands.
+family. Fingerprints are then buckets, enumerated like LSH bands.
 
 The rolling hash runs ONCE over the flattened Arrow batch (the same
 invertible-multiplier prefix trick as minhash.gram_hashes_flat — the window
@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fuzzy_dedupe_pipeline_spark.config import DedupeConfig
+from fuzzy_dedupe_pipeline_spark.lsh import bucket_pairs
 from fuzzy_dedupe_pipeline_spark.minhash import _U64, gram_hashes_flat
 
 
@@ -90,9 +91,12 @@ def substring_candidates(
 ) -> tuple[DataFrame, DataFrame]:
     """Candidate pairs sharing >=1 winnowed fingerprint.
 
-    Input needs (id, tokens array<string>). Same equi-join + hot-bucket-cap
-    shape as the LSH stage. Returns (pairs(id1,id2), dropped_fingerprints).
-    persists: caller-owned registry of persisted frames (see lsh.candidate_pairs).
+    Input needs (id, tokens array<string>). Same count-first bucket
+    enumeration and hot-bucket cap as the LSH stage (lsh.bucket_pairs), one
+    bucket per fingerprint. Returns (pairs(id1, id2), dropped(fp,
+    bucket_size)). batch_winnow emits each row's fingerprints once, so a
+    bucket holds each id once. persists: caller-owned registry of persisted
+    frames (see lsh.candidate_pairs).
     """
     winnow_udf = make_winnow_udf(cfg)
     fps = (
@@ -102,25 +106,14 @@ def substring_candidates(
         )
         .withColumn("fp", F.explode(winnow_udf(F.col("th"))))
         .select("id", "fp")
-        .dropDuplicates(["id", "fp"])
-        # fps feeds three plan branches (bucket sizes, both self-join sides);
-        # without persist the tokenize+winnow UDF chain re-executes per branch
+        # pairs and the dropped log both read fps; without persist the
+        # tokenize+winnow UDF chain re-executes per branch
         .persist()
     )
     if persists is not None:
         persists.append(fps)
-    sizes = fps.groupBy("fp").agg(F.count("*").alias("bucket_size"))
-    dropped = sizes.filter(F.col("bucket_size") > cfg.max_band_bucket)
-    ok = fps.join(F.broadcast(dropped.select("fp")), ["fp"], "left_anti")
-
-    pairs = (
-        ok.alias("a")
-        .join(ok.alias("b"), "fp")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-        .dropDuplicates(["id1", "id2"])
-    )
-    return pairs, dropped
+    pairs, dropped = bucket_pairs(fps, ["fp"], cfg.max_band_bucket)
+    return pairs.select("id1", "id2").dropDuplicates(["id1", "id2"]), dropped
 
 
 # -- exact longest-common-run verification ----------------------------------

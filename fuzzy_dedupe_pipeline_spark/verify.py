@@ -37,9 +37,10 @@ def verify_pairs(
     persists: list | None = None,
 ) -> DataFrame:
     """Verified edges: (id1, id2, jaccard, simhash_sim, containment,
-    substring_match, match_type, confidence).
+    shared_shingles, substring_match, match_type, confidence).
 
-    candidates / substring_pairs: (id1, id2) with id1 < id2.
+    candidates / substring_pairs: (id1, id2) with id1 < id2, joined into one
+    (id1, id2, substring_match) table and scored by score_candidates.
     sigs: (id, shingles, simhash).
     persists: caller-owned registry of persisted frames (see lsh.candidate_pairs).
     """
@@ -58,22 +59,30 @@ def verify_pairs(
         if persists is not None:
             persists.append(cand)
 
-    # semi-join prefilter: only candidate endpoints' signatures enter the
-    # scoring joins. Candidates cover a small fraction of a web corpus (exact
-    # dups are collapsed upstream), so this keeps the wide shingle arrays of
-    # non-candidate docs out of BOTH join shuffles — at 100 TB that is the
-    # difference between shuffling the corpus twice and shuffling the
-    # candidate slice twice. The id-only semi-join shuffle is cheap, but it
-    # adds a stage dependency (sigs' shuffle now waits on candidate
-    # generation), so cfg.verify_prefilter can disable it for small corpora.
-    if cfg.verify_prefilter:
+        # semi-join prefilter: only candidate endpoints' signatures enter the
+        # scoring joins. Candidates cover a small fraction of a web corpus
+        # (exact dups are collapsed upstream), so this keeps the wide shingle
+        # arrays of non-candidate docs out of BOTH join shuffles — at 100 TB
+        # that is the difference between shuffling the corpus twice and
+        # shuffling the candidate slice twice. The id-only semi-join shuffle
+        # is cheap, but it adds a stage dependency (sigs' shuffle now waits on
+        # candidate generation), so cfg.verify_prefilter can disable it for
+        # small corpora.
         cand_ids = (
             cand.select(F.col("id1").alias("id"))
             .union(cand.select(F.col("id2").alias("id")))
             .distinct()
         )
         sigs = sigs.join(cand_ids, "id", "left_semi")
+    return score_candidates(cand, sigs, cfg)
 
+
+def score_candidates(
+    cand: DataFrame, sigs: DataFrame, cfg: DedupeConfig
+) -> DataFrame:
+    """Score and verify one candidate table: (id1, id2, substring_match)
+    with id1 < id2, one row per pair, against sigs (id, shingles, simhash).
+    Output as verify_pairs."""
     a = sigs.select(
         F.col("id").alias("id1"),
         F.col("shingles").alias("sh1"),

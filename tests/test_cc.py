@@ -3,7 +3,12 @@ oracle, mirroring the reference BFS semantics (processor.py:206-228)."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import numpy as np
+import pytest
 
 from fuzzy_dedupe_pipeline_spark.cc import attach_singletons, connected_components
 
@@ -221,3 +226,27 @@ def test_driver_path_empty_edges(spark):
     out = connected_components(edf)
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == ["id", "cluster_id"]
+
+
+@pytest.mark.parametrize("value, want", [("12345", 12345), ("", 500_000), ("5e5", 500_000)])
+def test_driver_edges_env_parse(value, want):
+    """A malformed SPARK_GRAFT_CC_DRIVER_EDGES falls back to the default with
+    a warning instead of failing the import."""
+    env = dict(os.environ, SPARK_GRAFT_CC_DRIVER_EDGES=value)
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-W",
+            "always",
+            "-c",
+            "from fuzzy_dedupe_pipeline_spark import cc; print(cc.DRIVER_CC_MAX_EDGES)",
+        ],
+        env=env,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.split() == [str(want)]
+    assert ("is not an integer" in out.stderr) == (value == "5e5")
