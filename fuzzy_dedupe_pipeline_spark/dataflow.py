@@ -165,9 +165,9 @@ def dedupe_edges(
     its UDF output is exploded straight into bucket keys, and only the
     narrow (id1, id2, substring_match) candidate table is persisted, because
     it feeds both the endpoint slice and the scoring join. Shingle sets are
-    computed by a second UDF pass over just the candidate endpoints — a
-    small fraction of the corpus after exact-dedup + banding, and exactly
-    the slice the verify joins ship anyway (at 10^12 docs, the difference
+    computed by a second UDF pass over just the candidate endpoints — the
+    slice the verify joins ship anyway, which is most of a near-dup-heavy
+    corpus but not of a web crawl (at 10^12 docs, the difference
     between materializing a corpus-sized array column and touching it only
     where candidates exist). That slice is persisted and counted before
     scoring, which reads it twice (a/b sides): counted first, the scoring
@@ -316,7 +316,7 @@ def simhash_near_dup_pairs(
         cfg,
         id_col="url",
         text_col="text_norm",
-    ).filter(F.col("n_shingles") > 0)
+    )
     n_chunks = max_hamming + 1
     width = 64 // n_chunks
     mask = (1 << width) - 1
@@ -331,6 +331,10 @@ def simhash_near_dup_pairs(
             for i in range(n_chunks)
         ]
     )
+    # docs without shingles explode no chunks; a filter on n_shingles would
+    # be pushed beneath the projection and evaluate the UDF a second time
+    empty = F.array().cast("array<struct<chunk_id:int,chunk_val:bigint>>")
+    chunks = F.when(F.col("n_shingles") > 0, chunks).otherwise(empty)
     banded = sigs.select(
         F.col("id"), F.col("simhash"), F.explode(chunks).alias("c")
     ).select("id", "simhash", "c.chunk_id", "c.chunk_val")

@@ -14,10 +14,11 @@ Dataflow (designed for 10^12 docs):
      which is exactly where boilerplate mass is. The survivor set is bounded
      by total_lines / min_docs (a heavy-hitter bound), so with a corpus-
      proportional threshold it stays tiny no matter the corpus size.
-  2. remove_boilerplate: docs posexplode into (pos, line) rows, a broadcast
-     LEFT ANTI hash join against the frequent-lines table drops boilerplate
-     (O(1) hash probe per line, the survivor relation lives in the join's
-     broadcast hash map — never a single giant array row), and the doc is
+  2. remove_boilerplate: docs posexplode into (pos, line) rows, a LEFT ANTI
+     join against the frequent-lines table drops boilerplate (broadcast by
+     spark.sql.autoBroadcastJoinThreshold while the set is small: O(1) hash
+     probe per line, the survivor relation lives in the join's broadcast
+     hash map — never a single giant array row), and the doc is
      reassembled with a position-ordered collect_list. A per-doc NULL
      sentinel row rides through the anti join (NULL keys never match) so
      docs whose every line was boilerplate still come back, with
@@ -29,9 +30,9 @@ Dataflow (designed for 10^12 docs):
   the whole array per line and holds the set as one row, so it is NOT the
   default: with an absolute (non-proportional) min_docs the survivor set is
   unbounded, and boilerplate is exactly where frequent-line mass explodes.
-  If the set ever outgrows the broadcast threshold entirely, flipping the
-  anti join to sort-merge is Spark's own fallback — the join form degrades
-  gracefully where the array form OOMs the driver.
+  If the set ever outgrows the broadcast threshold, the planner flips the
+  anti join to sort-merge — no hint pins the broadcast, so the join form
+  degrades gracefully where the array form OOMs the driver.
 
 The reference has no line concept (spreadsheet rows); this operator exists
 for the north-rule webtext payload. Parity: `remove_boilerplate` has an
@@ -116,8 +117,8 @@ def remove_boilerplate(
         )
     if impl != "anti_join":
         raise ValueError(f"unknown impl: {impl!r}")
-    # anti_join: explode with position, drop boilerplate via broadcast hash
-    # anti join, reassemble position-ordered. The appended NULL element is a
+    # anti_join: explode with position, drop boilerplate via the anti join,
+    # reassemble position-ordered. The appended NULL element is a
     # per-doc sentinel: posexplode gives it pos = n_kept-agnostic last index,
     # a NULL join key never matches (anti join keeps it), count(_line) and
     # array_join both skip NULLs — so every doc reaches the groupBy even when
@@ -135,9 +136,7 @@ def remove_boilerplate(
         ).alias("_pos", "_line"),
     )
     kept = ex.join(
-        F.broadcast(freq.select(F.col("line").alias("_line"))),
-        on="_line",
-        how="left_anti",
+        freq.select(F.col("line").alias("_line")), on="_line", how="left_anti"
     )
     return (
         kept.groupBy(id_col, "n_lines")

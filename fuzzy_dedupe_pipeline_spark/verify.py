@@ -15,9 +15,12 @@ verbatim run is shared but global Jaccard < 0.8 (run-inside-bigger-doc); kept
 when the shared-shingle COUNT certifies the run length
 (>= cfg.substring_min_shared_shingles).
 
-All arithmetic is built-in column expressions (array_intersect / bit_count);
-the join ships shingle arrays only for candidate pairs — a tiny fraction of
-the corpus after LSH.
+All arithmetic is built-in column expressions (array_intersect / bit_count).
+Each pair's set sizes |A n B|, |A|, |B| come out of a one-element
+inline_outer: no predicate on a Generate's output is pushed below it, so the
+pass filter is not inlined into the join condition, where subexpression
+elimination does not reach and each use of the intersection ran again.
+The outer form keeps InferFiltersFromGenerate from adding a filter below it.
 """
 
 from __future__ import annotations
@@ -60,14 +63,10 @@ def verify_pairs(
             persists.append(cand)
 
         # semi-join prefilter: only candidate endpoints' signatures enter the
-        # scoring joins. Candidates cover a small fraction of a web corpus
-        # (exact dups are collapsed upstream), so this keeps the wide shingle
-        # arrays of non-candidate docs out of BOTH join shuffles — at 100 TB
-        # that is the difference between shuffling the corpus twice and
-        # shuffling the candidate slice twice. The id-only semi-join shuffle
-        # is cheap, but it adds a stage dependency (sigs' shuffle now waits on
-        # candidate generation), so cfg.verify_prefilter can disable it for
-        # small corpora.
+        # scoring joins, keeping non-candidate docs' wide shingle arrays out
+        # of BOTH join shuffles. The id-only semi-join shuffle is cheap, but
+        # sigs' shuffle now waits on candidate generation, so
+        # cfg.verify_prefilter can disable it where most docs are endpoints.
         cand_ids = (
             cand.select(F.col("id1").alias("id"))
             .union(cand.select(F.col("id2").alias("id")))
@@ -93,23 +92,27 @@ def score_candidates(
         F.col("shingles").alias("sh2"),
         F.col("simhash").alias("simhash2"),
     )
-    j = cand.join(a, "id1").join(b, "id2")
+    sizes = F.struct(
+        F.size(F.array_intersect("sh1", "sh2")).alias("inter"),
+        F.size("sh1").alias("n1"),
+        F.size("sh2").alias("n2"),
+    )
+    j = cand.join(a, "id1").join(b, "id2").select("*", F.inline_outer(F.array(sizes)))
 
-    inter = F.size(F.array_intersect("sh1", "sh2"))
-    n1, n2 = F.size("sh1"), F.size("sh2")
+    inter, n1, n2 = F.col("inter"), F.col("n1"), F.col("n2")
     union = n1 + n2 - inter
     scored = j.select(
         "id1",
         "id2",
-        "substring_match",
-        inter.cast("long").alias("shared_shingles"),
         F.when(union > 0, inter / union).otherwise(F.lit(0.0)).alias("jaccard"),
-        F.when(F.least(n1, n2) > 0, inter / F.least(n1, n2))
-        .otherwise(F.lit(0.0))
-        .alias("containment"),
         simhash_similarity_col(F.col("simhash1"), F.col("simhash2")).alias(
             "simhash_sim"
         ),
+        F.when(F.least(n1, n2) > 0, inter / F.least(n1, n2))
+        .otherwise(F.lit(0.0))
+        .alias("containment"),
+        inter.cast("long").alias("shared_shingles"),
+        "substring_match",
     )
 
     theta = F.lit(cfg.jaccard_threshold)
@@ -128,13 +131,7 @@ def score_candidates(
     jac, sim, cont = F.col("jaccard"), F.col("simhash_sim"), F.col("containment")
     capped = F.least(F.lit(cfg.confidence_cap), (jac + sim) / 2)
     return passed.select(
-        "id1",
-        "id2",
-        "jaccard",
-        "simhash_sim",
-        "containment",
-        "shared_shingles",
-        "substring_match",
+        "*",
         F.when(
             (jac >= theta)
             & F.col("substring_match")

@@ -39,3 +39,45 @@ def pages_df(spark, corpus):
         ]
     )
     return spark.createDataFrame(corpus.pages, schema=schema)
+
+
+# --- physical-plan helpers: match operators and expressions by class --------
+
+
+def executed_plan(df):
+    """df's executed physical plan, unwrapped from AQE's root node."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if node_name(plan) == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return plan
+
+
+def plan_nodes(plan):
+    """Every operator of a physical plan, root first, through the query
+    stages of an executed adaptive plan."""
+    yield plan
+    if node_name(plan).endswith("QueryStageExec"):
+        yield from plan_nodes(plan.plan())
+        return
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from plan_nodes(kids.apply(i))
+
+
+def node_name(node) -> str:
+    """Simple JVM class name of a plan node or expression."""
+    return node.getClass().getSimpleName()
+
+
+def expression_names(node) -> list[str]:
+    """Class names of every expression an operator evaluates, nested ones
+    included (a join condition, each projection, a generator's argument)."""
+
+    def walk(expr):
+        yield node_name(expr)
+        kids = expr.children()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i))
+
+    exprs = node.expressions()
+    return [n for i in range(exprs.size()) for n in walk(exprs.apply(i))]

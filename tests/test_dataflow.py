@@ -7,6 +7,7 @@ from __future__ import annotations
 import dataclasses
 
 import pytest
+from conftest import executed_plan, node_name, plan_nodes
 from pyspark.sql import functions as F
 
 from fuzzy_dedupe_pipeline_spark.config import DedupeConfig
@@ -14,6 +15,7 @@ from fuzzy_dedupe_pipeline_spark.dataflow import (
     candidate_table,
     clean_docs,
     dedupe_edges,
+    simhash_near_dup_pairs,
     with_exact_rep,
 )
 from fuzzy_dedupe_pipeline_spark.lsh import candidate_pairs
@@ -68,21 +70,10 @@ def test_fused_edges_match_stage_functions(spark, reps, cap, with_substring):
         assert dropped.count() > 0 and dropped_fps.count() > 0
 
 
-def _nodes(plan):
-    yield plan
-    kids = plan.children()
-    for i in range(kids.size()):
-        yield from _nodes(kids.apply(i))
-
-
-def _name(node) -> str:
-    return node.getClass().getSimpleName()
-
-
 def _agg_functions(node) -> list[str]:
     exprs = node.aggregateExpressions()
     return [
-        _name(exprs.apply(i).aggregateFunction()) for i in range(exprs.size())
+        node_name(exprs.apply(i).aggregateFunction()) for i in range(exprs.size())
     ]
 
 
@@ -91,7 +82,7 @@ def _window_functions(node) -> list[str]:
     fns = [exprs.apply(i).child().windowFunction() for i in range(exprs.size())]
     # an aggregate used as a window function is wrapped in AggregateExpression
     return [
-        _name(f.aggregateFunction() if _name(f) == "AggregateExpression" else f)
+        node_name(f.aggregateFunction() if node_name(f) == "AggregateExpression" else f)
         for f in fns
     ]
 
@@ -100,19 +91,24 @@ def test_candidate_table_plan_one_udf_count_before_collect(spark, reps):
     """One Arrow UDF pass feeds both candidate kinds, and the bucket-size
     count sits between it and the collect_list, so no bucket over the cap
     ever builds an array."""
-    plan = candidate_table(reps, DedupeConfig())._jdf.queryExecution().executedPlan()
-    if _name(plan) == "AdaptiveSparkPlanExec":
-        plan = plan.executedPlan()
-    assert [_name(n) for n in _nodes(plan)].count("ArrowEvalPythonExec") == 1
+    plan = executed_plan(candidate_table(reps, DedupeConfig()))
+    assert [node_name(n) for n in plan_nodes(plan)].count("ArrowEvalPythonExec") == 1
 
     collect = next(
         n
-        for n in _nodes(plan)
-        if _name(n).endswith("AggregateExec") and "CollectList" in _agg_functions(n)
+        for n in plan_nodes(plan)
+        if node_name(n).endswith("AggregateExec") and "CollectList" in _agg_functions(n)
     )
     count = next(
         n
-        for n in _nodes(collect)
-        if _name(n) == "WindowExec" and "Count" in _window_functions(n)
+        for n in plan_nodes(collect)
+        if node_name(n) == "WindowExec" and "Count" in _window_functions(n)
     )
-    assert "ArrowEvalPythonExec" in [_name(n) for n in _nodes(count)]
+    assert "ArrowEvalPythonExec" in [node_name(n) for n in plan_nodes(count)]
+
+
+def test_simhash_pairs_plan_one_udf(spark, reps):
+    """The SimHash UDF runs once per row: docs without shingles explode no
+    chunks instead of being filtered, which would re-evaluate the UDF."""
+    plan = executed_plan(simhash_near_dup_pairs(reps, DedupeConfig()))
+    assert [node_name(n) for n in plan_nodes(plan)].count("ArrowEvalPythonExec") == 1

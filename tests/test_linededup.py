@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+from conftest import executed_plan, node_name, plan_nodes
 from pyspark.sql import functions as F
 
 from fuzzy_dedupe_pipeline_spark.linededup import frequent_lines, remove_boilerplate
@@ -65,16 +67,38 @@ def _plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_default_is_broadcast_hash_anti_join(spark):
+def _anti_join_ops(df) -> list[str]:
+    return [
+        node_name(n)
+        for n in plan_nodes(executed_plan(df))
+        if node_name(n).endswith("JoinExec") and n.joinType().toString() == "LeftAnti"
+    ]
+
+
+@pytest.mark.parametrize(
+    "threshold, join",
+    [(None, "BroadcastHashJoinExec"), ("-1", "SortMergeJoinExec")],
+    ids=["default", "no_broadcast"],
+)
+def test_anti_join_follows_broadcast_threshold(spark, threshold, join):
     # the default boilerplate probe is a broadcast HASH anti join (O(1)
-    # probe, set lives in the join's hash relation) — never a collected
-    # array scanned per line, never a shuffle join of the corpus
-    docs = _docs(spark, [(1, "a\nb"), (2, "a")])
-    plan = _plan(remove_boilerplate(docs, min_docs=2))
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    assert "array_contains" not in plan
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
+    # probe, set lives in the join's hash relation), never a collected array
+    # scanned per line; no hint pins the broadcast, so a frequent-line set
+    # over the threshold (-1: every set) falls back to sort-merge, same rows.
+    # The executed plan is read after the run: these in-memory docs have no
+    # size estimate, so AQE makes the broadcast choice from the shuffled set.
+    docs = _docs(spark, [(1, "nav\nalpha"), (2, "nav\nbeta"), (3, "gamma")])
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    default = spark.conf.get(key)
+    try:
+        if threshold is not None:
+            spark.conf.set(key, threshold)
+        out = remove_boilerplate(docs, min_docs=2)
+        rows = sorted(tuple(r) for r in out.collect())
+        assert _anti_join_ops(out) == [join]
+    finally:
+        spark.conf.set(key, default)
+    assert rows == [(1, "alpha", 2, 1), (2, "beta", 2, 1), (3, "gamma", 1, 0)]
 
 
 def test_broadcast_array_impl_is_map_side(spark):

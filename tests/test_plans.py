@@ -9,6 +9,7 @@ and nothing in the dedup dataflow degenerates to a cartesian product.
 from __future__ import annotations
 
 import pytest
+from conftest import executed_plan, node_name, plan_nodes
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -84,8 +85,22 @@ def test_lsh_band_pairs_single_bucket_shuffle(spark):
     plan = _plan(pairs)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert plan.count("hashpartitioning(band_id") == 1
-    assert plan.count("hashpartitioning(id1") == 1  # the pair distinct
+    keys = [
+        _hash_keys(n)
+        for n in plan_nodes(executed_plan(pairs))
+        if node_name(n) == "ShuffleExchangeExec"
+    ]
+    assert keys.count(["band_id", "band_hash"]) == 1
+    assert keys.count(["id1", "id2"]) == 1  # the pair distinct
+
+
+def _hash_keys(exchange) -> list[str] | None:
+    """Column names a shuffle hash-partitions on; None for other schemes."""
+    part = exchange.outputPartitioning()
+    if node_name(part) != "HashPartitioning":
+        return None
+    exprs = part.expressions()
+    return [exprs.apply(i).name() for i in range(exprs.size())]
 
 
 def test_cosine_blocked_is_equi_join(spark):
