@@ -331,8 +331,7 @@ def simhash_near_dup_pairs(
             for i in range(n_chunks)
         ]
     )
-    # docs without shingles explode no chunks; a filter on n_shingles would
-    # be pushed beneath the projection and evaluate the UDF a second time
+    # docs without shingles explode nothing (a filter would run the UDF twice)
     empty = F.array().cast("array<struct<chunk_id:int,chunk_val:bigint>>")
     chunks = F.when(F.col("n_shingles") > 0, chunks).otherwise(empty)
     banded = sigs.select(

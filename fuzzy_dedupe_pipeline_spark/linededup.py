@@ -15,14 +15,19 @@ Dataflow (designed for 10^12 docs):
      by total_lines / min_docs (a heavy-hitter bound), so with a corpus-
      proportional threshold it stays tiny no matter the corpus size.
   2. remove_boilerplate: docs posexplode into (pos, line) rows, a LEFT ANTI
-     join against the frequent-lines table drops boilerplate (broadcast by
-     spark.sql.autoBroadcastJoinThreshold while the set is small: O(1) hash
-     probe per line, the survivor relation lives in the join's broadcast
-     hash map — never a single giant array row), and the doc is
+     join against the frequent-lines table drops boilerplate, and the doc is
      reassembled with a position-ordered collect_list. A per-doc NULL
      sentinel row rides through the anti join (NULL keys never match) so
      docs whose every line was boilerplate still come back, with
      text_clean = '' (array_join skips NULL elements).
+
+  No hint picks the join; spark.sql.autoBroadcastJoinThreshold does, on a
+  size that follows the corpus, not the survivor set: the scan's estimate,
+  then at run time the shuffled line counts below the frequency filter. A
+  corpus whose lines fit gets a broadcast hash anti join (O(1) probe, the
+  set in the join's hash map). A bigger corpus shuffles and sorts all its
+  lines for a sort-merge anti join even when the set is a few lines: the
+  price of a join that still runs when the set outgrows a broadcast.
 
   A map-side variant (impl="broadcast_array": the survivor set collected
   into ONE array row, crossJoin-broadcast, per-line array_contains) is kept
@@ -30,9 +35,6 @@ Dataflow (designed for 10^12 docs):
   the whole array per line and holds the set as one row, so it is NOT the
   default: with an absolute (non-proportional) min_docs the survivor set is
   unbounded, and boilerplate is exactly where frequent-line mass explodes.
-  If the set ever outgrows the broadcast threshold, the planner flips the
-  anti join to sort-merge — no hint pins the broadcast, so the join form
-  degrades gracefully where the array form OOMs the driver.
 
 The reference has no line concept (spreadsheet rows); this operator exists
 for the north-rule webtext payload. Parity: `remove_boilerplate` has an
@@ -118,11 +120,10 @@ def remove_boilerplate(
     if impl != "anti_join":
         raise ValueError(f"unknown impl: {impl!r}")
     # anti_join: explode with position, drop boilerplate via the anti join,
-    # reassemble position-ordered. The appended NULL element is a
-    # per-doc sentinel: posexplode gives it pos = n_kept-agnostic last index,
-    # a NULL join key never matches (anti join keeps it), count(_line) and
-    # array_join both skip NULLs — so every doc reaches the groupBy even when
-    # the anti join removed all its real lines, at zero extra shuffle.
+    # reassemble position-ordered. The appended NULL element is a per-doc
+    # sentinel: a NULL join key never matches (the anti join keeps it), and
+    # count(_line) and array_join skip NULLs, so every doc reaches the
+    # groupBy even when all its real lines were removed, at no extra shuffle.
     ex = docs.select(
         id_col,
         F.size(lines).cast("long").alias("n_lines"),

@@ -16,11 +16,10 @@ when the shared-shingle COUNT certifies the run length
 (>= cfg.substring_min_shared_shingles).
 
 All arithmetic is built-in column expressions (array_intersect / bit_count).
-Each pair's set sizes |A n B|, |A|, |B| come out of a one-element
-inline_outer: no predicate on a Generate's output is pushed below it, so the
-pass filter is not inlined into the join condition, where subexpression
-elimination does not reach and each use of the intersection ran again.
-The outer form keeps InferFiltersFromGenerate from adding a filter below it.
+Each pair's |A n B|, |A|, |B| come out of a one-element inline_outer. No
+predicate is pushed below a Generate, so the pass filter is not inlined into
+the join condition, where each use of the intersection ran again; the outer
+form adds no InferFiltersFromGenerate filter below it.
 """
 
 from __future__ import annotations
@@ -104,15 +103,15 @@ def score_candidates(
     scored = j.select(
         "id1",
         "id2",
+        "substring_match",
+        inter.cast("long").alias("shared_shingles"),
         F.when(union > 0, inter / union).otherwise(F.lit(0.0)).alias("jaccard"),
-        simhash_similarity_col(F.col("simhash1"), F.col("simhash2")).alias(
-            "simhash_sim"
-        ),
         F.when(F.least(n1, n2) > 0, inter / F.least(n1, n2))
         .otherwise(F.lit(0.0))
         .alias("containment"),
-        inter.cast("long").alias("shared_shingles"),
-        "substring_match",
+        simhash_similarity_col(F.col("simhash1"), F.col("simhash2")).alias(
+            "simhash_sim"
+        ),
     )
 
     theta = F.lit(cfg.jaccard_threshold)
@@ -131,7 +130,13 @@ def score_candidates(
     jac, sim, cont = F.col("jaccard"), F.col("simhash_sim"), F.col("containment")
     capped = F.least(F.lit(cfg.confidence_cap), (jac + sim) / 2)
     return passed.select(
-        "*",
+        "id1",
+        "id2",
+        "jaccard",
+        "simhash_sim",
+        "containment",
+        "shared_shingles",
+        "substring_match",
         F.when(
             (jac >= theta)
             & F.col("substring_match")

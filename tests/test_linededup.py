@@ -86,7 +86,9 @@ def test_anti_join_follows_broadcast_threshold(spark, threshold, join):
     # scanned per line; no hint pins the broadcast, so a frequent-line set
     # over the threshold (-1: every set) falls back to sort-merge, same rows.
     # The executed plan is read after the run: these in-memory docs have no
-    # size estimate, so AQE makes the broadcast choice from the shuffled set.
+    # size estimate, so the static plan is sort-merge at any threshold, and
+    # AQE switches to a broadcast at run time, after the docs' lines have
+    # been shuffled, when the shuffled line counts fit the threshold.
     docs = _docs(spark, [(1, "nav\nalpha"), (2, "nav\nbeta"), (3, "gamma")])
     key = "spark.sql.autoBroadcastJoinThreshold"
     default = spark.conf.get(key)

@@ -90,8 +90,10 @@ def test_lsh_band_pairs_single_bucket_shuffle(spark):
         for n in plan_nodes(executed_plan(pairs))
         if node_name(n) == "ShuffleExchangeExec"
     ]
-    assert keys.count(["band_id", "band_hash"]) == 1
-    assert keys.count(["id1", "id2"]) == 1  # the pair distinct
+    # one exchange LEADS with each key, and it has the full key list: no
+    # second shuffle on band_id or id1 alone (or with other keys) either
+    assert [k for k in keys if k and k[0] == "band_id"] == [["band_id", "band_hash"]]
+    assert [k for k in keys if k and k[0] == "id1"] == [["id1", "id2"]]  # pair distinct
 
 
 def _hash_keys(exchange) -> list[str] | None:
