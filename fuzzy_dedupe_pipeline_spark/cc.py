@@ -53,12 +53,13 @@ def _env_edges(name: str, default: int) -> int:
 
 
 # Edge sets at or below this size take the driver union-find fast path (see
-# connected_components docstring); 0 disables it. At the default 500k edges
-# the collected rows are ~tens of MB — the same bounded-driver-collect class
-# as the IVF centroid fit (similarity.py) and the streaming bucket lists —
-# and the returned relation is one row per NODE, far smaller still. The
-# break-even is where collect throughput (~1 s per few-hundred-k rows)
-# approaches the distributed fixpoint's ~0.6 s/round driver-serial floor.
+# connected_components docstring); 0 disables it. The driver holds at most
+# this many + 1 collected rows, and they are Python Row objects: ~500 B
+# each for URL-sized string ids (measured with tracemalloc), so ~250 MB at
+# the default 500k, plus the union-find dict — a bounded collect, but not a
+# small one. The returned relation is one row per NODE. The break-even is
+# where collect throughput (~1 s per few-hundred-k rows) approaches the
+# distributed fixpoint's ~0.6 s/round driver-serial floor.
 DRIVER_CC_MAX_EDGES = _env_edges("SPARK_GRAFT_CC_DRIVER_EDGES", 500_000)
 
 
@@ -85,25 +86,30 @@ def connected_components(
     something is broken, and silent wrong labels are never acceptable).
 
     driver_max_edges (default: env SPARK_GRAFT_CC_DRIVER_EDGES, 500k): edge
-    sets at or below this size are solved by union-find ON THE DRIVER — the
-    materialized symmetrized edge table (already checkpointed + counted for
-    the shuffle-width/step gates) is collected once (a few MB at the cap,
-    the same bounded-collect class as the IVF centroid fit) and the labels
-    come back as a local relation. The wall cost of the distributed fixpoint
-    on a small graph is pure driver-serial job latency (~0.6 s/round
-    regardless of data size), so a 42k-edge graph pays ~3 s for work the
-    driver does in milliseconds; a web-scale edge set exceeds the cap and
-    keeps the full distributed loop untouched. Labels are EXACTLY the
-    distributed result: cluster_id = min member id, where Python's str/int
-    ordering equals Spark's binary UTF8String / numeric comparison
-    (UTF-8 byte order is code-point order), asserted cross-path by
+    sets of at most this many rows are solved by union-find ON THE DRIVER.
+    The caller's (id1, id2) rows are collected once, at most
+    driver_max_edges + 1 of them, and union-find runs on them as they are:
+    no symmetrize, dedup, checkpoint or count job first. The labels come
+    back as a local relation. The wall cost of the distributed fixpoint on a
+    small graph is pure driver-serial job latency (~0.6 s/round regardless
+    of data size), so a 42k-edge graph pays ~3 s for work the driver does in
+    milliseconds; a collect that comes back over the cap is dropped and the
+    full distributed loop runs untouched. Labels are EXACTLY the distributed
+    result: cluster_id = min member id, where Python's str/int ordering
+    equals Spark's binary UTF8String / numeric comparison (UTF-8 byte order
+    is code-point order), asserted cross-path by
     test_driver_path_matches_distributed. Pass 0 to force the distributed
     loop (the non-convergence guard and per-round checkpoint semantics only
-    exist there).
+    exist there). A set checkpoint_dir always takes the distributed loop:
+    the caller asked for its reliable per-round checkpoints.
     """
     if driver_max_edges is None:
         driver_max_edges = DRIVER_CC_MAX_EDGES
     spark = edges.sparkSession
+    if driver_max_edges > 0 and checkpoint_dir is None:
+        rows = edges.select("id1", "id2").limit(driver_max_edges + 1).collect()
+        if len(rows) <= driver_max_edges:
+            return _driver_union_find(spark, rows, edges.schema["id1"].dataType)
     if checkpoint_dir is not None:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
         _ckpt = lambda df: df.checkpoint(eager=True)  # noqa: E731
@@ -157,8 +163,6 @@ def connected_components(
     # conf is restored in a finally.
     spark_conf = spark.conf
     n_edges = sym.count()
-    if driver_max_edges > 0 and n_edges <= driver_max_edges:
-        return _driver_union_find(spark, sym, edges.schema[0].dataType)
     default_p = spark.sparkContext.defaultParallelism
     p = max(1, min(default_p, (n_edges // 100_000) + 1))
     old_p = spark_conf.get("spark.sql.shuffle.partitions")
@@ -181,10 +185,10 @@ def connected_components(
         spark_conf.set("spark.sql.shuffle.partitions", old_p)
 
 
-def _driver_union_find(spark, sym, id_type) -> DataFrame:
-    """Exact small-graph path: collect the (bounded, checkpointed)
-    symmetrized edges, union-find with path compression, label every node
-    with the MIN member id of its component (same ordering as the
+def _driver_union_find(spark, edges: list, id_type) -> DataFrame:
+    """Exact small-graph path: union-find with path compression over the
+    collected (id1, id2) rows (any orientation, duplicates allowed), label
+    every node with the MIN member id of its component (same ordering as the
     distributed min-label fixpoint — Python str/int comparison coincides
     with Spark's binary/numeric ordering). Returns a local relation with the
     edge id dtype, so downstream joins broadcast it. NULL ids (excluded by
@@ -199,8 +203,7 @@ def _driver_union_find(spark, sym, id_type) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    for row in sym.select("src", "dst").collect():
-        a, b = row[0], row[1]
+    for a, b in edges:
         if a not in parent:
             parent[a] = a
         if b not in parent:

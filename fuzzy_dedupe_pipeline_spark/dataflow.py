@@ -5,12 +5,17 @@ session memory (persist/localCheckpoint) instead of parquet — the shape used
 by __spark_entry__ queries and bench.py. DedupePipeline remains the
 production path (resumable, metrics); this is the ad-hoc/query path.
 
-The two compositions are not the same graph. This path fuses the LSH and
-substring candidate stages into one chain (candidate_table) and scores its
-table directly (verify.score_candidates), while pipeline.py still runs
+The two compositions are not the same graph. This path makes one Arrow
+pass per call: signature_table builds every rep's shingle set, SimHash and
+LSH/substring bucket keys at once, candidate_table enumerates the fused
+candidate pairs from that table, and verify.score_candidates scores them
+against the same cached shingles. pipeline.py still runs with_signatures,
 candidate_pairs, substring_candidates and verify_pairs as separate durable
 stages. tests/test_dataflow.py checks that both give the same verified
 edges; declaring the stages once for both paths is still open.
+
+The price of the single pass is the cache: every rep's shingle array stays
+in session memory until the edges are checkpointed (see dedupe_edges).
 
 Note dedupe_clusters/dedupe_edges run eager jobs when CALLED (cache builds
 are ordered deliberately — see dedupe_edges); the returned DataFrame's
@@ -33,16 +38,14 @@ from fuzzy_dedupe_pipeline_spark.config import DEFAULT_CONFIG, DedupeConfig
 from fuzzy_dedupe_pipeline_spark.lsh import bucket_pairs
 from fuzzy_dedupe_pipeline_spark.minhash import (
     LONGS,
+    SIGNATURE_FIELDS,
     band_hashes_col,
-    batch_minhash,
-    batch_shingle_sets,
+    batch_signatures,
     lane_seeds,
-    row_lengths,
     sig_struct,
     simhash_similarity_col,
     with_sig_udf,
     with_simhash,
-    with_verify_sigs,
 )
 from fuzzy_dedupe_pipeline_spark.normalize import normalize_text_col
 from fuzzy_dedupe_pipeline_spark.substring import batch_winnow
@@ -92,23 +95,22 @@ def exact_edges_df(clean: DataFrame) -> DataFrame:
 
 
 def make_candidate_udf(cfg: DedupeConfig, with_fps: bool = True):
-    """Arrow UDF: token-hash array -> (n_tokens, minhash, fps) — everything
-    candidate generation reads, from ONE pass over the rows: the LSH
-    signature (minhash.batch_minhash over the shingle sets) and the winnowed
+    """Arrow UDF: token-hash array -> (n_tokens, shingles, minhash, simhash,
+    fps) — everything candidate generation and verification read, from ONE
+    pass over the rows: make_signature_udf's columns (shingles and simhash
+    are make_verify_udf's values for the same rows) plus the winnowed
     substring fingerprints (substring.batch_winnow over the same token
-    hashes; empty when with_fps is False). No shingles or simhash cross back:
-    verification recomputes those over the candidate endpoints only."""
+    hashes; empty when with_fps is False)."""
     seeds = lane_seeds(cfg.num_hashes, cfg.seed)
     k, w, q = cfg.shingle_k, cfg.substring_gram, cfg.winnow_window
     no_fps = np.empty(0, dtype=np.int64)
 
-    @F.pandas_udf(sig_struct(n_tokens=T.IntegerType(), minhash=LONGS, fps=LONGS))
+    @F.pandas_udf(sig_struct(**SIGNATURE_FIELDS, fps=LONGS))
     def candidate_sig(token_hashes: pd.Series) -> pd.DataFrame:
         rows = list(token_hashes)
         return pd.DataFrame(
             {
-                "n_tokens": row_lengths(rows),
-                "minhash": list(batch_minhash(batch_shingle_sets(rows, k), seeds)),
+                **batch_signatures(rows, k, seeds),
                 "fps": batch_winnow(rows, w, q) if with_fps else [no_fps] * len(rows),
             }
         )
@@ -116,20 +118,15 @@ def make_candidate_udf(cfg: DedupeConfig, with_fps: bool = True):
     return candidate_sig
 
 
-def candidate_table(
+def signature_table(
     reps: DataFrame, cfg: DedupeConfig, with_substring: bool = True
 ) -> DataFrame:
-    """(id1, id2, substring_match) over reps (id, text_norm): the pairs of
-    lsh.candidate_pairs and substring.substring_candidates, one row per pair,
-    substring_match true iff the pair shares a fingerprint — the table
-    verify_pairs builds with a full outer join of the two pair sets.
-
-    One chain instead of two: one Arrow UDF (make_candidate_udf), then one
-    explode to tagged bucket keys — (band_id, band_hash) for the bands of
-    docs with tokens (band_table's rows), (-1, fp) for each fingerprint — and
-    one count-first bucket enumeration (lsh.bucket_pairs) under the shared
-    cap. Band and fingerprint buckets never share a key, so each is capped
-    exactly as its own stage caps it."""
+    """(id, shingles, simhash, keys) over reps (id, text_norm): what
+    score_candidates reads, plus each doc's tagged bucket keys —
+    (band_id, band_hash) for the bands of docs with tokens (band_table's
+    rows), (-1, fp) for each fingerprint. One Arrow UDF (make_candidate_udf)
+    builds every column; the MinHash lanes are reduced to band keys
+    here and never leave the row."""
     sigs = with_sig_udf(
         reps, make_candidate_udf(cfg, with_substring), "id", "text_norm"
     )
@@ -144,8 +141,26 @@ def candidate_table(
         F.when(F.col("n_tokens") > 0, bands).otherwise(F.array().cast(BUCKET_KEYS)),
         fps,
     )
-    rows = sigs.select("id", F.explode(keys).alias("k")).select(
-        "id", "k.band_id", "k.band_hash"
+    return sigs.select("id", "shingles", "simhash", keys.alias("keys"))
+
+
+def candidate_table(sigs: DataFrame, cfg: DedupeConfig) -> DataFrame:
+    """(id1, id2, substring_match) over signature_table's (id, keys): the
+    pairs of lsh.candidate_pairs and substring.substring_candidates, one row
+    per pair, substring_match true iff the pair shares a fingerprint — the
+    table verify_pairs builds with a full outer join of the two pair sets.
+
+    One chain instead of two: one explode of the tagged bucket keys and one
+    count-first bucket enumeration (lsh.bucket_pairs) under the shared cap.
+    Band and fingerprint buckets never share a key, so each is capped
+    exactly as its own stage caps it."""
+    # explode_OUTER plus a null filter: a plain explode of the keys column
+    # makes InferFiltersFromGenerate push size(keys) > 0 below it, and on an
+    # unpersisted signature_table that filter re-runs the Arrow UDF
+    rows = (
+        sigs.select("id", F.explode_outer("keys").alias("k"))
+        .filter(F.col("k").isNotNull())
+        .select("id", "k.band_id", "k.band_hash")
     )
     pairs, _ = bucket_pairs(rows, ["band_id", "band_hash"], cfg.max_band_bucket)
     return pairs.groupBy("id1", "id2").agg(
@@ -161,35 +176,30 @@ def dedupe_edges(
 ) -> DataFrame:
     """Verified near-dup edges among exact-representatives.
 
-    Cache discipline: the corpus-wide pass (candidate_table) keeps nothing —
-    its UDF output is exploded straight into bucket keys, and only the
-    narrow (id1, id2, substring_match) candidate table is persisted, because
-    it feeds both the endpoint slice and the scoring join. Shingle sets are
-    computed by a second UDF pass over just the candidate endpoints — the
-    slice the verify joins ship anyway, which is most of a near-dup-heavy
-    corpus but not of a web crawl (at 10^12 docs, the difference
-    between materializing a corpus-sized array column and touching it only
-    where candidates exist). That slice is persisted and counted before
-    scoring, which reads it twice (a/b sides): counted first, the scoring
-    join's stages read a populated cache instead of racing to build it
-    (each racing stage would rerun the UDF).
+    Cache discipline: one Arrow pass (signature_table) builds every rep's
+    shingle set, SimHash and bucket keys, and that one table is persisted:
+    candidate_table explodes its keys and score_candidates joins its
+    shingles twice (a/b sides). It is counted before either consumer runs,
+    so the scoring join's stages read a populated cache instead of racing
+    to build it (each racing stage would rerun the UDF).
+
+    Scale trade: the cache holds every rep's shingle array (~8 B per token),
+    not only the candidate endpoints' — the same column the durable 02_sigs
+    stage writes. In exchange no rep's text (~6 B per token) is shuffled
+    through an endpoint semi-join and tokenized a second time; on the
+    benchmark corpora most reps are endpoints anyway (572 of 626 on
+    templated_families). A web crawl, where few reps have candidates, pays
+    the cache for all of them.
 
     persists: caller-owned registry of persisted frames; the caller unpersists
     them once the result is materialized (see dedupe_clusters)."""
-    reps = clean_reps.select("id", "text_norm")
-    cand = candidate_table(reps, cfg, with_substring).persist()
-    end_ids = (
-        cand.select(F.col("id1").alias("id"))
-        .union(cand.select(F.col("id2").alias("id")))
-        .distinct()
-    )
-    sigs_verify = with_verify_sigs(
-        reps.join(end_ids, "id", "left_semi"), cfg, "id", "text_norm"
+    sigs = signature_table(
+        clean_reps.select("id", "text_norm"), cfg, with_substring
     ).persist()
     if persists is not None:
-        persists.extend([cand, sigs_verify])
-    sigs_verify.count()
-    return score_candidates(cand, sigs_verify, cfg)
+        persists.append(sigs)
+    sigs.count()
+    return score_candidates(candidate_table(sigs, cfg), sigs, cfg)
 
 
 def dedupe_clusters(
@@ -208,7 +218,7 @@ def dedupe_clusters(
     rebalance_input round-robin-repartitions the corpus to the session's
     default parallelism before the signature stages. Source layout is not to
     be trusted: a single unsplittable parquet row group puts EVERY row in one
-    partition and serializes both Arrow-UDF passes onto one core (file
+    partition and serializes the Arrow-UDF pass onto one core (file
     splits exist but only the one containing the row-group start gets rows).
     One cheap shuffle of the text buys guaranteed balance; disable it only
     when the input is known well-partitioned (e.g. a bucketed Iceberg table).

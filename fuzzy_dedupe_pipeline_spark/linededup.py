@@ -21,13 +21,19 @@ Dataflow (designed for 10^12 docs):
      docs whose every line was boilerplate still come back, with
      text_clean = '' (array_join skips NULL elements).
 
-  No hint picks the join; spark.sql.autoBroadcastJoinThreshold does, on a
-  size that follows the corpus, not the survivor set: the scan's estimate,
-  then at run time the shuffled line counts below the frequency filter. A
-  corpus whose lines fit gets a broadcast hash anti join (O(1) probe, the
-  set in the join's hash map). A bigger corpus shuffles and sorts all its
-  lines for a sort-merge anti join even when the set is a few lines: the
-  price of a join that still runs when the set outgrows a broadcast.
+  The join is picked from the survivor set itself, measured before the
+  join is planned: one bounded collect of at most BOILER_MAX_LINES lines
+  of at most BOILER_MAX_LINE_BYTES each. A set that comes back whole and
+  within spark.sql.autoBroadcastJoinThreshold is broadcast as a local
+  relation: a broadcast hash anti join (O(1) probe, the set in the join's
+  hash map) however big the corpus is. A set over either bound is left to
+  the planner with no hint, so an unbounded set degrades to a sort-merge
+  anti join instead of being forced into a broadcast. The planner alone
+  would size the set from the corpus (the scan's estimate, then at run
+  time the shuffled line counts below the frequency filter), and past
+  ~200k docs would shuffle and sort every corpus line for a 3-line set.
+  The measurement costs one job ahead of the join; the main query then
+  reads the collected set instead of recomputing it.
 
   A map-side variant (impl="broadcast_array": the survivor set collected
   into ONE array row, crossJoin-broadcast, per-line array_contains) is kept
@@ -46,6 +52,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# bounds of the frequent-line set collected to pick the anti join (see the
+# module docstring): at most (BOILER_MAX_LINES + 1) * BOILER_MAX_LINE_BYTES
+# bytes (~16 MB) reach the driver
+BOILER_MAX_LINES = 4096
+BOILER_MAX_LINE_BYTES = 4096
 
 
 def lines_col(c: Column, sep: str = "\n") -> Column:
@@ -136,9 +148,10 @@ def remove_boilerplate(
             F.concat(lines, F.array(F.lit(None).cast("string")))
         ).alias("_pos", "_line"),
     )
-    kept = ex.join(
-        freq.select(F.col("line").alias("_line")), on="_line", how="left_anti"
-    )
+    boiler = _broadcast_lines(freq)
+    if boiler is None:
+        boiler = freq.select(F.col("line").alias("_line"))
+    kept = ex.join(boiler, on="_line", how="left_anti")
     return (
         kept.groupBy(id_col, "n_lines")
         .agg(
@@ -160,3 +173,29 @@ def remove_boilerplate(
             (F.col("n_lines") - F.col("_n_kept")).cast("long").alias("n_removed"),
         )
     )
+
+
+def _broadcast_lines(freq: DataFrame) -> DataFrame | None:
+    """freq's lines as a broadcast local relation (_line) when the set fits
+    the session's broadcast threshold; None when it does not, or when it
+    exceeds the collect bounds, which are checked without collecting more
+    than BOILER_MAX_LINES + 1 rows of at most BOILER_MAX_LINE_BYTES each.
+    NULL lines (docs without lines) never match an anti join key and are
+    left out."""
+    spark = freq.sparkSession
+    budget = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if budget <= 0:
+        return None
+    big = F.octet_length("line") > BOILER_MAX_LINE_BYTES
+    rows = (
+        freq.filter(F.col("line").isNotNull())
+        .select(F.when(~big, F.col("line")).alias("line"), big.alias("big"))
+        .limit(BOILER_MAX_LINES + 1)
+        .collect()
+    )
+    if len(rows) > BOILER_MAX_LINES or any(r.big for r in rows):
+        return None
+    if sum(len(r.line.encode("utf-8")) for r in rows) > budget:
+        return None
+    lines = spark.createDataFrame([(r.line,) for r in rows], "_line string")
+    return F.broadcast(lines)

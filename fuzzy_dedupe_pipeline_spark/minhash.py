@@ -211,29 +211,32 @@ def sig_struct(**fields: T.DataType) -> T.StructType:
 # is np.unique + output assembly.
 
 
+SIGNATURE_FIELDS = dict(
+    n_tokens=T.IntegerType(), shingles=LONGS, minhash=LONGS, simhash=T.LongType()
+)
+
+
+def batch_signatures(rows: list, k: int, seeds: np.ndarray) -> dict:
+    """SIGNATURE_FIELDS' columns for one Arrow batch of token-hash rows.
+    n_tokens is computed here, NOT as a separate F.size(tokens) projection —
+    that would duplicate the whole normalize/tokenize chain in the plan."""
+    shingle_rows = batch_shingle_sets(rows, k)
+    return {
+        "n_tokens": row_lengths(rows),
+        "shingles": shingle_rows,
+        "minhash": list(batch_minhash(shingle_rows, seeds)),
+        "simhash": batch_simhash(shingle_rows),
+    }
+
+
 def make_signature_udf(cfg: DedupeConfig):
     """Arrow UDF: token-hash array -> (n_tokens, shingles, minhash, simhash)."""
     seeds = lane_seeds(cfg.num_hashes, cfg.seed)
     k = cfg.shingle_k
 
-    @F.pandas_udf(
-        sig_struct(
-            n_tokens=T.IntegerType(), shingles=LONGS, minhash=LONGS, simhash=T.LongType()
-        )
-    )
+    @F.pandas_udf(sig_struct(**SIGNATURE_FIELDS))
     def signature(token_hashes: pd.Series) -> pd.DataFrame:
-        rows = list(token_hashes)
-        shingle_rows = batch_shingle_sets(rows, k)
-        # n_tokens computed here, NOT as a separate F.size(tokens) projection —
-        # that would duplicate the whole normalize/tokenize chain in the plan
-        return pd.DataFrame(
-            {
-                "n_tokens": row_lengths(rows),
-                "shingles": shingle_rows,
-                "minhash": list(batch_minhash(shingle_rows, seeds)),
-                "simhash": batch_simhash(shingle_rows),
-            }
-        )
+        return pd.DataFrame(batch_signatures(list(token_hashes), k, seeds))
 
     return signature
 

@@ -52,16 +52,37 @@ def executed_plan(df):
     return plan
 
 
-def plan_nodes(plan):
+def plan_nodes(plan, caches: set | None = None):
     """Every operator of a physical plan, root first, through the query
-    stages of an executed adaptive plan."""
+    stages of an executed adaptive plan. Given a set, also through the plan
+    of every cached relation the plan scans, each relation once however
+    many scans read it; the set collects the relations visited."""
     yield plan
-    if node_name(plan).endswith("QueryStageExec"):
-        yield from plan_nodes(plan.plan())
+    name = node_name(plan)
+    if name.endswith("QueryStageExec"):
+        yield from plan_nodes(plan.plan(), caches)
         return
+    if caches is not None:
+        if name == "AdaptiveSparkPlanExec":
+            yield from plan_nodes(plan.executedPlan(), caches)
+            return
+        if name == "InMemoryTableScanExec":
+            builder = plan.relation().cacheBuilder()
+            key = _identity(builder)
+            if key not in caches:
+                caches.add(key)
+                yield from plan_nodes(builder.cachedPlan(), caches)
+            return
     kids = plan.children()
     for i in range(kids.size()):
-        yield from plan_nodes(kids.apply(i))
+        yield from plan_nodes(kids.apply(i), caches)
+
+
+def _identity(obj) -> int:
+    """JVM identity hash of a py4j object."""
+    from pyspark import SparkContext
+
+    return SparkContext._jvm.System.identityHashCode(obj)
 
 
 def node_name(node) -> str:

@@ -10,6 +10,8 @@ import sys
 import numpy as np
 import pytest
 
+from conftest import node_name
+
 from fuzzy_dedupe_pipeline_spark.cc import attach_singletons, connected_components
 
 
@@ -219,6 +221,35 @@ def test_driver_path_matches_distributed(spark):
         connected_components(edf_l).schema["cluster_id"].dataType.simpleString()
         == "bigint"
     )
+
+
+def _analyzed_root(df) -> str:
+    return node_name(df._jdf.queryExecution().analyzed())
+
+
+def test_checkpoint_dir_takes_distributed_loop_by_default(spark, tmp_path):
+    """With default arguments a small edge set takes the driver path, unless
+    checkpoint_dir is set: then the caller's reliable per-round checkpoints
+    are written (the distributed loop ran) and the labels equal the driver
+    path's."""
+    import os
+
+    rng = np.random.default_rng(3)
+    edges = [(int(a), int(b)) for a, b in rng.integers(0, 80, size=(90, 2)) if a != b]
+    edf = spark.createDataFrame(
+        [(str(a), str(b)) for a, b in edges], "id1 string, id2 string"
+    )
+    # the driver path's labels are a broadcast-hinted local table
+    drv = connected_components(edf)
+    assert _analyzed_root(drv) == "ResolvedHint"
+    ckdir = str(tmp_path / "cc_ckpt_default")
+    loop = connected_components(edf, checkpoint_dir=ckdir)
+    assert _analyzed_root(loop) != "ResolvedHint"
+    assert {tuple(r) for r in loop.collect()} == {tuple(r) for r in drv.collect()}
+    found = [
+        f for _, _, files in os.walk(ckdir) for f in files if f.startswith("part-")
+    ]
+    assert found, "checkpoint_dir was set but no checkpoint was written"
 
 
 def test_driver_path_empty_edges(spark):

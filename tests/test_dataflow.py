@@ -1,6 +1,8 @@
-"""The session path's fused candidate front end (dataflow.candidate_table and
-dedupe_edges) against the separate stage functions the durable pipeline
-composes: same verified edges, one Arrow pass, count before collect."""
+"""The session path's fused front end (dataflow.signature_table,
+candidate_table and dedupe_edges) against the separate stage functions the
+durable pipeline composes: same verified edges, one Arrow pass, count before
+collect, and the candidate UDF's shingles and SimHash equal to the verify
+UDF's."""
 
 from __future__ import annotations
 
@@ -15,11 +17,19 @@ from fuzzy_dedupe_pipeline_spark.dataflow import (
     candidate_table,
     clean_docs,
     dedupe_edges,
+    make_candidate_udf,
+    signature_table,
     simhash_near_dup_pairs,
     with_exact_rep,
 )
 from fuzzy_dedupe_pipeline_spark.lsh import candidate_pairs
-from fuzzy_dedupe_pipeline_spark.minhash import with_signatures, with_verify_sigs
+from fuzzy_dedupe_pipeline_spark.minhash import (
+    _CHUNK,
+    make_verify_udf,
+    with_sig_udf,
+    with_signatures,
+    with_verify_sigs,
+)
 from fuzzy_dedupe_pipeline_spark.normalize import tokens_raw_col
 from fuzzy_dedupe_pipeline_spark.substring import substring_candidates
 from fuzzy_dedupe_pipeline_spark.verify import verify_pairs
@@ -87,12 +97,30 @@ def _window_functions(node) -> list[str]:
     ]
 
 
+def _arrow_udfs(plan, caches: set | None = None) -> int:
+    return [node_name(n) for n in plan_nodes(plan, caches)].count("ArrowEvalPythonExec")
+
+
+def test_dedupe_edges_plan_one_udf(spark, reps):
+    """One Arrow UDF pass per call: candidate generation and scoring both
+    read the one cached signature table, which no second pass over the
+    candidate endpoints rebuilds."""
+    persists: list = []
+    edges = dedupe_edges(reps, DedupeConfig(), persists=persists)
+    try:
+        assert _arrow_udfs(executed_plan(edges), set()) == 1
+    finally:
+        for df in persists:
+            df.unpersist()
+
+
 def test_candidate_table_plan_one_udf_count_before_collect(spark, reps):
     """One Arrow UDF pass feeds both candidate kinds, and the bucket-size
     count sits between it and the collect_list, so no bucket over the cap
     ever builds an array."""
-    plan = executed_plan(candidate_table(reps, DedupeConfig()))
-    assert [node_name(n) for n in plan_nodes(plan)].count("ArrowEvalPythonExec") == 1
+    cfg = DedupeConfig()
+    plan = executed_plan(candidate_table(signature_table(reps, cfg), cfg))
+    assert _arrow_udfs(plan) == 1
 
     collect = next(
         n
@@ -111,4 +139,30 @@ def test_simhash_pairs_plan_one_udf(spark, reps):
     """The SimHash UDF runs once per row: docs without shingles explode no
     chunks instead of being filtered, which would re-evaluate the UDF."""
     plan = executed_plan(simhash_near_dup_pairs(reps, DedupeConfig()))
-    assert [node_name(n) for n in plan_nodes(plan)].count("ArrowEvalPythonExec") == 1
+    assert _arrow_udfs(plan) == 1
+
+
+def test_candidate_udf_shingles_simhash_match_verify_udf(spark, reps):
+    """Scoring reads the candidate UDF's shingles and simhash where it used
+    to read make_verify_udf's: both must be equal row for row, including
+    empty text, rows shorter than k (one whole-row shingle) and a row whose
+    shingles span more than one cache chunk of minhash._CHUNK."""
+    cfg = DedupeConfig()
+    long_row = " ".join(f"w{i}" for i in range(_CHUNK + cfg.shingle_k + 100))
+    short_row = " ".join(f"s{i}" for i in range(cfg.shingle_k - 1))
+    extra = spark.createDataFrame(
+        [("empty", ""), ("null", None), ("short", short_row), ("long", long_row)],
+        "id string, text_norm string",
+    )
+    rows = reps.union(extra)
+
+    def sigs(udf):
+        out = with_sig_udf(rows, udf, "id", "text_norm").select("id", "shingles", "simhash")
+        return {r.id: (tuple(r.shingles), r.simhash) for r in out.collect()}
+
+    got = sigs(make_candidate_udf(cfg))
+    want = sigs(make_verify_udf(cfg))
+    assert got == want
+    assert got["empty"] == got["null"] == ((), 0)
+    assert len(got["short"][0]) == 1
+    assert len(got["long"][0]) > _CHUNK

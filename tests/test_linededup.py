@@ -103,6 +103,30 @@ def test_anti_join_follows_broadcast_threshold(spark, threshold, join):
     assert rows == [(1, "alpha", 2, 1), (2, "beta", 2, 1), (3, "gamma", 1, 0)]
 
 
+def test_small_set_broadcasts_past_corpus_estimate(spark, tmp_path):
+    """The anti join follows the size of the frequent-line set, not of the
+    corpus: with the threshold lowered below the corpus's size estimate (and
+    below its shuffled line counts, which AQE would measure), a 2-line set
+    is still broadcast."""
+    n = 600
+    rows = [(i, f"nav\nfooter\nbody line {i} " + "x" * 40) for i in range(n)]
+    path = str(tmp_path / "docs")
+    _docs(spark, rows).write.parquet(path)
+    docs = spark.read.parquet(path)
+    threshold = 4096
+    assert docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() > threshold
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    default = spark.conf.get(key)
+    try:
+        spark.conf.set(key, str(threshold))
+        out = remove_boilerplate(docs, min_docs=2)
+        got = {r.doc_id: (r.text_clean, r.n_lines, r.n_removed) for r in out.collect()}
+        assert _anti_join_ops(out) == ["BroadcastHashJoinExec"]
+    finally:
+        spark.conf.set(key, default)
+    assert got == {i: (f"body line {i} " + "x" * 40, 3, 2) for i in range(n)}
+
+
 def test_broadcast_array_impl_is_map_side(spark):
     # the tiny-set variant stays map-side: the only join is the 1-row
     # broadcast of the collected set — no explode/re-assembly of the corpus
