@@ -307,15 +307,16 @@ def simhash_near_dup_pairs(
     clean: DataFrame, cfg: DedupeConfig, max_hamming: int = 3
 ) -> DataFrame:
     """SimHash near-dup pairs: pigeonhole banding (hamming <= d => at least one
-    of d+1 bit-chunks equal) -> equi-join candidates -> exact hamming filter.
+    of d+1 bit-chunks equal) -> bucket enumeration (lsh.bucket_pairs, the
+    simhash as payload) -> exact hamming filter.
     Returns (id1, id2, hamming, simhash_sim).
 
     Same hot-key guard as the LSH stage: a chunk value shared by m docs emits
-    O(m^2) join rows, so (chunk_id, chunk_val) buckets larger than
-    cfg.max_band_bucket are excluded from pair generation (pathological at
-    web scale: boilerplate-dominated corpora collapse many docs onto one
-    simhash). The default cap (5000) is far above any sandbox bucket, so
-    oracle parity at sf0.01 is unaffected.
+    O(m^2) pairs, so (chunk_id, chunk_val) buckets larger than
+    cfg.max_band_bucket are counted and excluded before any array is built
+    (pathological at web scale: boilerplate-dominated corpora collapse many
+    docs onto one simhash). The default cap (5000) is far above any sandbox
+    bucket, so oracle parity at sf0.01 is unaffected.
 
     Signature stage uses the simhash-only UDF (with_simhash): identical
     fingerprints, but the 128 MinHash lanes this query never reads are not
@@ -347,57 +348,22 @@ def simhash_near_dup_pairs(
     banded = sigs.select(
         F.col("id"), F.col("simhash"), F.explode(chunks).alias("c")
     ).select("id", "simhash", "c.chunk_id", "c.chunk_val")
-    # r6 second pass: bucket enumeration (same shape as lsh.candidate_pairs)
-    # instead of bucket-size agg + broadcast anti-join + banded self-join.
-    # The unpersisted signature UDF lineage used to be evaluated up to
-    # THREE times (the hot-bucket aggregate and both join sides ran as
-    # concurrent AQE stages, profiled as twin 1.2 s stages at 50k docs);
-    # one groupBy computes it once, the size filter replaces the anti-join
-    # (identical cap semantics), and sorted-struct enumeration emits exactly
-    # the {id1 < id2} candidate set (ids are unique within a bucket — one
-    # row per chunk per doc). The hamming filter stays BEFORE the distinct
-    # (r6 first pass, guide §2.3): the O(bucket^2) candidate stream is
-    # filtered by the cheap xor/bit_count predicate as it is generated, so
-    # the distinct still shuffles only true near-dup pairs.
-    buckets = (
-        banded.groupBy("chunk_id", "chunk_val")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("id"), F.col("simhash")))
-            ).alias("_members"),
-            F.count("*").alias("bucket_size"),
-        )
-        .filter(
-            (F.col("bucket_size") <= cfg.max_band_bucket)
-            & (F.col("bucket_size") >= 2)
-        )
+    pairs, _ = bucket_pairs(
+        banded, ["chunk_id", "chunk_val"], cfg.max_band_bucket, ["simhash"]
     )
-    # outer explodes dodge the InferFiltersFromGenerate pushdown trap; both
-    # arrays are provably non-empty on these rows
-    ex2 = buckets.select(
-        "_members", F.posexplode_outer("_members").alias("_j", "_m2")
-    ).filter(F.col("_j") >= 1)
-    cand = (
-        ex2.select(
-            F.explode_outer(F.slice("_members", 1, F.col("_j"))).alias("_m1"),
-            "_m2",
-        )
-        .select(
-            F.col("_m1.id").alias("id1"),
-            F.col("_m2.id").alias("id2"),
-            F.col("_m1.simhash").alias("s1"),
-            F.col("_m2.simhash").alias("s2"),
-        )
-        .filter(F.bit_count(F.col("s1").bitwiseXOR(F.col("s2"))) <= max_hamming)
-    )
+    # the hamming filter stays BEFORE the distinct: the O(bucket^2)
+    # candidate stream is filtered by the cheap xor/bit_count predicate as
+    # it is generated, so the distinct shuffles only true near-dup pairs
+    hamming = F.bit_count(F.col("simhash1").bitwiseXOR(F.col("simhash2")))
     return (
-        cand.dropDuplicates(["id1", "id2"])
+        pairs.filter(hamming <= max_hamming)
+        .dropDuplicates(["id1", "id2"])
         .select(
             "id1",
             "id2",
-            F.bit_count(F.col("s1").bitwiseXOR(F.col("s2"))).alias("hamming"),
-            F.round(simhash_similarity_col(F.col("s1"), F.col("s2")), 6).alias(
-                "simhash_sim"
-            ),
+            hamming.alias("hamming"),
+            F.round(
+                simhash_similarity_col(F.col("simhash1"), F.col("simhash2")), 6
+            ).alias("simhash_sim"),
         )
     )

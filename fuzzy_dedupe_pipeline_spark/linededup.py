@@ -35,13 +35,6 @@ Dataflow (designed for 10^12 docs):
   The measurement costs one job ahead of the join; the main query then
   reads the collected set instead of recomputing it.
 
-  A map-side variant (impl="broadcast_array": the survivor set collected
-  into ONE array row, crossJoin-broadcast, per-line array_contains) is kept
-  for the tiny-set regime — no explode, no reassembly shuffle — but it scans
-  the whole array per line and holds the set as one row, so it is NOT the
-  default: with an absolute (non-proportional) min_docs the survivor set is
-  unbounded, and boilerplate is exactly where frequent-line mass explodes.
-
 The reference has no line concept (spreadsheet rows); this operator exists
 for the north-rule webtext payload. Parity: `remove_boilerplate` has an
 exact DuckDB twin in __spark_entry__.oracle_sql (unnest + HAVING + lambda
@@ -109,29 +102,16 @@ def remove_boilerplate(
     text_col: str = "text",
     sep: str = "\n",
     min_docs: int = 100,
-    impl: str = "anti_join",
 ) -> DataFrame:
     """-> (id_col, text_clean, n_lines, n_removed) with boilerplate lines
     (>= min_docs distinct docs) deleted, surviving-line order preserved.
 
     Docs whose every line is boilerplate survive with text_clean = ''.
-    Both impls compute identical rows (test_impls_agree); see the module
-    docstring for the shape trade-off.
+    See the module docstring for the join's shape.
     """
     freq = frequent_lines(docs, text_col, sep, min_docs)
     lines = lines_col(F.col(text_col), sep)
-    if impl == "broadcast_array":
-        boiler = freq.agg(F.array_sort(F.collect_list("line")).alias("_boiler"))
-        kept = F.filter(lines, lambda l: ~F.array_contains(F.col("_boiler"), l))
-        return docs.crossJoin(F.broadcast(boiler)).select(
-            id_col,
-            F.concat_ws(sep, kept).alias("text_clean"),
-            F.size(lines).cast("long").alias("n_lines"),
-            (F.size(lines) - F.size(kept)).cast("long").alias("n_removed"),
-        )
-    if impl != "anti_join":
-        raise ValueError(f"unknown impl: {impl!r}")
-    # anti_join: explode with position, drop boilerplate via the anti join,
+    # explode with position, drop boilerplate via the anti join,
     # reassemble position-ordered. The appended NULL element is a per-doc
     # sentinel: a NULL join key never matches (the anti join keeps it), and
     # count(_line) and array_join skip NULLs, so every doc reaches the

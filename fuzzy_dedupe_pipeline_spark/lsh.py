@@ -1,24 +1,32 @@
-"""LSH banding -> candidate pairs, with explicit hot-bucket skew handling.
+"""LSH banding -> candidate pairs, and the one bucket-pair primitive.
 
 Replaces the reference's FAISS exact top-k self-join
 (dedupe_logic/processor.py:120-138). Banding hash-partitions the band table
 by (band_id, band_hash) once and enumerates pairs inside each bucket
 (bucket_pairs, value-identical to the former band self-join with one
-exchange instead of three; the substring stage and the fused session front
-end use the same helper). Unlike the reference's k=min(10,n) cap
+exchange instead of three). Unlike the reference's k=min(10,n) cap
 (processor.py:137), recall is governed by the (bands x rows) S-curve:
 P(candidate | J=0.8) = 1-(1-0.8^4)^32 > 1 - 6e-8.
 
-Skew: boilerplate-heavy corpora produce hot (band_id, band_hash) buckets whose
-pair blowup is O(m^2). Buckets larger than cfg.max_band_bucket are counted,
-excluded from pair generation before any array is built, and *logged*
-(returned as a dropped-buckets DataFrame the pipeline writes to metrics) —
-the north rule's explicit skew handling. Exact duplicates never reach here
-(the pipeline collapses them first), so oversized buckets are genuinely
-pathological keys, not normal data.
+bucket_pairs is every bucket-shaped candidate join in the library: LSH
+bands (candidate_pairs), winnowed fingerprints
+(substring.substring_candidates), both at once in the fused session front
+end (dataflow.candidate_table), SimHash chunks
+(dataflow.simhash_near_dup_pairs, with the simhash as payload) and word
+n-grams (textstats.ngram_jaccard_pairs, with n_grams as payload).
+
+Skew: boilerplate-heavy corpora produce hot buckets whose pair blowup is
+O(m^2). Buckets larger than the caller's cap are counted, excluded from
+pair generation before any array is built, and *logged* (returned as a
+dropped-buckets DataFrame the pipeline writes to metrics) — the north
+rule's explicit skew handling. Exact duplicates never reach the LSH stage
+(the pipeline collapses them first), so oversized band buckets are
+genuinely pathological keys, not normal data.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -44,15 +52,17 @@ def band_table(sigs: DataFrame, cfg: DedupeConfig) -> DataFrame:
 
 
 def bucket_pairs(
-    rows: DataFrame, keys: list[str], cap: int
+    rows: DataFrame, keys: list[str], cap: int, payload: Sequence[str] = ()
 ) -> tuple[DataFrame, DataFrame]:
-    """Ordered pairs of ids sharing a bucket, over rows (id, *keys) with one
-    row per (bucket, member).
+    """Ordered pairs of ids sharing a bucket, over rows (id, *keys, *payload)
+    with one row per (bucket, member).
 
-    Returns (pairs(*keys, id1, id2), dropped(*keys, bucket_size)): pairs with
-    id1 < id2 inside every bucket of 2..cap members, NOT distinct across
-    buckets (callers dedupe or aggregate per pair); dropped lists every bucket
-    over the cap.
+    Returns (pairs(*keys, id1, id2, <col>1, <col>2 for each payload col),
+    dropped(*keys, bucket_size)): pairs with id1 < id2 inside every bucket
+    of 2..cap members, each side carrying its own payload values, NOT
+    distinct across buckets (callers dedupe or aggregate per pair); dropped
+    lists every bucket over the cap. Keys group as GROUP BY does: rows with
+    a NULL key form one bucket.
 
     Count first: a window count over the bucket key tags every row with its
     bucket size, and rows of buckets over the cap are filtered out BEFORE the
@@ -61,12 +71,13 @@ def bucket_pairs(
     collect_list aggregate reuses the window's hash partitioning: the rows
     cross ONE exchange. Per-task state is O(cap) per array.
 
-    Enumeration: for every j >= 1, id2 = ids[j] pairs with each id1 in
-    ids[0..j-1]. With ids ascending (array_sort's string ordering is the
-    same binary comparison as `<`) this is {id1 < id2}; the filter only
-    removes self-pairs of an id repeated in one bucket. slice keeps per-row
-    state O(bucket), never a flattened O(bucket^2) array. Outer explodes:
-    both arrays are provably non-empty, and the non-outer form would make
+    Enumeration: members are (id, *payload) structs; for every j >= 1,
+    m2 = members[j] pairs with each m1 in members[0..j-1]. With members
+    ascending (array_sort orders structs by id first, the same binary
+    comparison as `<`) this is {id1 < id2}; the filter only removes
+    self-pairs of an id repeated in one bucket. slice keeps per-row state
+    O(bucket), never a flattened O(bucket^2) array. Outer explodes: both
+    arrays are provably non-empty, and the non-outer form would make
     InferFiltersFromGenerate push size()>0 predicates below the exchange.
 
     dropped is its own count aggregate over rows (never run unless read);
@@ -78,13 +89,16 @@ def bucket_pairs(
     buckets = (
         sized.filter((F.col("bucket_size") <= cap) & (F.col("bucket_size") >= 2))
         .groupBy(*keys)
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
+        .agg(F.array_sort(F.collect_list(F.struct("id", *payload))).alias("_ms"))
     )
     ex2 = buckets.select(
-        *keys, "ids", F.posexplode_outer("ids").alias("_j", "id2")
+        *keys, "_ms", F.posexplode_outer("_ms").alias("_j", "_m2")
     ).filter(F.col("_j") >= 1)
     pairs = ex2.select(
-        *keys, F.explode_outer(F.slice("ids", 1, F.col("_j"))).alias("id1"), "id2"
+        *keys, F.explode_outer(F.slice("_ms", 1, F.col("_j"))).alias("_m1"), "_m2"
+    ).select(
+        *keys,
+        *[F.col(f"_m{s}.{c}").alias(f"{c}{s}") for c in ["id", *payload] for s in "12"],
     ).filter(F.col("id1") < F.col("id2"))
     dropped = (
         rows.groupBy(*keys)

@@ -26,7 +26,7 @@ scale these are Iceberg tables and the label rewrite is a MERGE INTO):
   labels/bucket=B/   (id, cluster_id) hash-bucketed by id; reads AND writes
                      touch only buckets containing batch candidates / remapped
                      cluster members (dynamic partition overwrite — the
-                     MERGE INTO analog)
+                     MERGE INTO analog); a rewrite leaves one file per bucket
   clusterdir/batch_id=N/cbucket=C/  (cluster_id, bucket) membership directory,
                      hash-bucketed by cluster_id: maps a remapped cluster to
                      the label buckets holding its members, so a merge rewrite
@@ -85,6 +85,8 @@ would silently report "no state" and the store would be clobbered.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -259,7 +261,15 @@ class IncrementalDedupe:
     def _collect_buckets(self, df: DataFrame) -> list[int]:
         """Driver-side bucket list for partition pruning; <= n_label_buckets
         rows, one tiny job."""
-        return sorted(int(r["bucket"]) for r in df.distinct().collect())
+        return self._collect_bucket_sets(b=df)["b"]
+
+    def _collect_bucket_sets(self, **dfs: DataFrame) -> dict[str, list[int]]:
+        """Several bucket lists (each df has a `bucket` column) in one job."""
+        tagged = [df.select(F.lit(k).alias("set"), "bucket") for k, df in dfs.items()]
+        out: dict[str, list[int]] = {k: [] for k in dfs}
+        for r in reduce(DataFrame.union, tagged).distinct().collect():
+            out[r["set"]].append(int(r["bucket"]))
+        return {k: sorted(v) for k, v in out.items()}
 
     def _read_labels(
         self, spark: SparkSession, buckets: list[int] | None
@@ -959,24 +969,28 @@ class IncrementalDedupe:
         ep_buckets: list[int] = []
         bands_old = None
         if have_state:
-            # the LSH index probe: store-side bands are the big side, the
-            # micro-batch bands broadcast. The store read is pruned to the
-            # partitions holding the batch's OWN band hashes (one tiny
-            # bucket-list job over bands_new) — the probe's I/O is bounded by
-            # the batch's band diversity, not the corpus.
-            bh_buckets = self._collect_buckets(
-                bands_new.select(
+            # the LSH index probe: store-side bands are the big side. No
+            # broadcast hint: bands_new holds 32 rows per batch doc, so it
+            # grows with the trigger size; checkpointed, its size is known,
+            # and the planner broadcasts it while that fits the threshold.
+            # The store read is pruned to the partitions holding the batch's
+            # OWN band hashes (one tiny bucket-list job over bands_new) — the
+            # probe's I/O is bounded by the batch's band diversity, not the
+            # corpus. The same job lists the label buckets of the batch's
+            # ids, which the label rewrite reads.
+            own = self._collect_bucket_sets(
+                bh=bands_new.select(
                     self._bh_bucket(F.col("band_hash")).alias("bucket")
-                )
+                ),
+                ids=sigs_new.select(self._bucket(F.col("id")).alias("bucket")),
             )
+            bh_buckets = own["bh"]
             bands_old = self._read_bands_old(spark, batch_id, bh_buckets)
         if bands_old is not None:
             cross_raw = (
                 bands_old.join(
-                    F.broadcast(
-                        bands_new.select(
-                            "band_id", "band_hash", F.col("id").alias("id_new")
-                        )
+                    bands_new.select(
+                        "band_id", "band_hash", F.col("id").alias("id_new")
                     ),
                     ["band_id", "band_hash"],
                 )
@@ -1091,8 +1105,8 @@ class IncrementalDedupe:
                         "left_semi",
                     ).select("bucket")
                 )
-            new_buckets = self._collect_buckets(new_b.select("bucket"))
-            write_buckets = sorted(set(member_buckets) | set(new_buckets))
+            # new_b holds exactly sigs_new's ids, so its buckets are own["ids"]
+            write_buckets = sorted(set(member_buckets) | set(own["ids"]))
             labels_touched = self._read_labels(spark, write_buckets)
             updated = (
                 labels_touched.join(
@@ -1146,9 +1160,11 @@ class IncrementalDedupe:
         )
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
-            to_write.write.mode("overwrite").partitionBy("bucket").parquet(
-                self.labels_path
-            )
+            # one task per bucket, so one data file per bucket dir: without
+            # the exchange every task holding a bucket's rows writes a file
+            to_write.repartition("bucket").write.mode("overwrite").partitionBy(
+                "bucket"
+            ).parquet(self.labels_path)
         finally:
             spark.conf.set(
                 "spark.sql.sources.partitionOverwriteMode", with_dyn

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from fuzzy_dedupe_pipeline_spark.lsh import bucket_pairs
+
 # Small deterministic stopword inventories. Heuristic quality is not the
 # point (the driver corpus is synthetic); determinism + SQL-expressibility is.
 STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -306,10 +308,11 @@ def ngram_jaccard_pairs(
 ) -> tuple[DataFrame, DataFrame]:
     """Word n-gram Jaccard similarity join within block_cols blocks.
 
-    Relational shape (distinct-gram self-join) with the SAME hot-key guard as
-    the LSH stage: a gram shared by m docs emits O(m^2) join rows, so grams
-    whose per-block document frequency exceeds max_gram_bucket are excluded
-    from pair generation and returned as `dropped` for the caller to log —
+    Pairs come from per-(gram, block) buckets (lsh.bucket_pairs, n_grams as
+    payload) under the SAME hot-key guard as the LSH stage: a gram shared by
+    m docs emits O(m^2) pairs, so grams whose per-block document frequency
+    exceeds max_gram_bucket are counted and excluded before any array is
+    built, and returned as `dropped` for the caller to log —
     a boilerplate trigram shared by 10^5 docs at web scale would otherwise
     produce 10^10 rows. Dropped grams also leave the Jaccard *numerator*
     (the denominator keeps every gram), so capped scores only ever shrink —
@@ -326,13 +329,13 @@ def ngram_jaccard_pairs(
     # token array has no such trap). array_distinct replaces the corpus-wide
     # dropDuplicates shuffle, the doc_id gram-count groupBy becomes a
     # map-side size(), and n_grams rides the exploded rows so the two
-    # count-joins disappear: 3 shuffles total (gram-frequency agg, gram
-    # self-join, pair agg) instead of 7. Output is identical: same gram
+    # count-joins disappear: 2 shuffles total (gram buckets, pair agg)
+    # instead of 7. Output is identical: same gram
     # strings (full windows, single-space joins), same distinct sets, same
     # denominators and cap semantics.
     toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != "")
     staged = docs.select(
-        F.col(id_col).alias("doc_id"), *block_cols, toks.alias("_toks")
+        F.col(id_col).alias("id"), *block_cols, toks.alias("_toks")
     )
     sz = F.size(F.col("_toks"))
     grams = F.when(
@@ -343,7 +346,7 @@ def ngram_jaccard_pairs(
         ),
     ).otherwise(F.array().cast("array<string>"))
     staged = staged.select(
-        "doc_id", *block_cols, F.array_distinct(grams).alias("_gd")
+        "id", *block_cols, F.array_distinct(grams).alias("_gd")
     )
     # explode_OUTER + null filter, NOT plain explode: for a non-outer
     # generate Catalyst infers `size(_gd) > 0` and pushes it through the
@@ -353,66 +356,26 @@ def ngram_jaccard_pairs(
     # explicit isNotNull restores the identical row set (empty-gram docs
     # contribute no gram rows either way).
     g = staged.select(
-        "doc_id",
+        "id",
         *block_cols,
         F.size(F.col("_gd")).alias("n_grams"),
         F.explode_outer(F.col("_gd")).alias("gram"),
     ).filter(F.col("gram").isNotNull())
-    # r6 second rewrite: per-(gram, block) bucket enumeration instead of the
-    # gram self-join — the same shape as lsh.candidate_pairs. The intended
-    # shared-exchange form (repartition on gram reused by the frequency agg,
-    # the anti-join, and both self-join sides) did NOT reuse in practice:
-    # AQE planned the self-join as a BroadcastHashJoin, and the committed
-    # plan shows the whole scan->tokenize->gram lineage FOUR times. One
-    # groupBy(gram, blocks) with a sorted (doc_id, n_grams) member list
-    # computes that lineage ONCE, yields the drop log from the same
-    # aggregate, and enumerates every a.doc_id < b.doc_id pair in-bucket
-    # (array_sort orders structs by doc_id first — unique per bucket since
-    # grams are per-doc distinct — with the same string/numeric ordering as
-    # the `<` operator). Per-task state is O(max_gram_bucket); oversized
-    # buckets are excluded before enumeration exactly as the anti-join did.
-    buckets = g.groupBy("gram", *block_cols).agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("doc_id"), F.col("n_grams")))
-        ).alias("_members"),
-        F.count("*").alias("bucket_size"),
+    # one exchange of the gram rows computes the scan->tokenize->gram
+    # lineage once. Grams are per-doc distinct, so ids are unique per bucket
+    # and `shared` counts each shared gram once.
+    pairs, dropped = bucket_pairs(
+        g, ["gram", *block_cols], max_gram_bucket, ["n_grams"]
     )
-    dropped = buckets.filter(F.col("bucket_size") > max_gram_bucket).select(
-        "gram", *block_cols, "bucket_size"
-    )
-    ok = buckets.filter(
-        (F.col("bucket_size") <= max_gram_bucket)
-        & (F.col("bucket_size") >= 2)
-    )
-    # outer explodes dodge the InferFiltersFromGenerate pushdown trap; both
-    # arrays are provably non-empty on these rows
-    ex2 = ok.select(
-        "_members", F.posexplode_outer("_members").alias("_j", "_m2")
-    ).filter(F.col("_j") >= 1)
-    co = ex2.select(
-        F.explode_outer(F.slice("_members", 1, F.col("_j"))).alias("_m1"),
-        "_m2",
-    )
-    shared = (
-        co.groupBy(
-            F.col("_m1.doc_id").alias("id1"),
-            F.col("_m2.doc_id").alias("id2"),
-            F.col("_m1.n_grams").alias("n1"),
-            F.col("_m2.n_grams").alias("n2"),
-        )
+    shared = F.col("shared")
+    union = F.col("n_grams1") + F.col("n_grams2") - shared
+    jaccard = (
+        pairs.groupBy("id1", "id2", "n_grams1", "n_grams2")
         .agg(F.count("*").cast("long").alias("shared"))
-    )
-    pairs = (
-        shared.select(
-            "id1",
-            "id2",
-            F.round(
-                F.col("shared") / (F.col("n1") + F.col("n2") - F.col("shared")), 6
-            ).alias("jaccard"),
-        )
+        .select("id1", "id2", F.round(shared / union, 6).alias("jaccard"))
         .filter(F.col("jaccard") >= min_jaccard)
     )
-    return pairs, dropped
+    return jaccard, dropped
 
 
 # --- C4-style line-quality filter -----------------------------------------

@@ -1,8 +1,8 @@
 """The session path's fused front end (dataflow.signature_table,
 candidate_table and dedupe_edges) against the separate stage functions the
 durable pipeline composes: same verified edges, one Arrow pass, count before
-collect, and the candidate UDF's shingles and SimHash equal to the verify
-UDF's."""
+collect (also in the SimHash and n-gram joins), and the candidate UDF's
+shingles and SimHash equal to the verify UDF's."""
 
 from __future__ import annotations
 
@@ -32,6 +32,7 @@ from fuzzy_dedupe_pipeline_spark.minhash import (
 )
 from fuzzy_dedupe_pipeline_spark.normalize import tokens_raw_col
 from fuzzy_dedupe_pipeline_spark.substring import substring_candidates
+from fuzzy_dedupe_pipeline_spark.textstats import ngram_jaccard_pairs
 from fuzzy_dedupe_pipeline_spark.verify import verify_pairs
 
 # low enough to drop both LSH band buckets and fingerprint buckets of the
@@ -114,14 +115,26 @@ def test_dedupe_edges_plan_one_udf(spark, reps):
             df.unpersist()
 
 
-def test_candidate_table_plan_one_udf_count_before_collect(spark, reps):
-    """One Arrow UDF pass feeds both candidate kinds, and the bucket-size
-    count sits between it and the collect_list, so no bucket over the cap
-    ever builds an array."""
-    cfg = DedupeConfig()
-    plan = executed_plan(candidate_table(signature_table(reps, cfg), cfg))
-    assert _arrow_udfs(plan) == 1
-
+@pytest.mark.parametrize(
+    "build, udfs",
+    [
+        (lambda reps, cfg: candidate_table(signature_table(reps, cfg), cfg), 1),
+        (simhash_near_dup_pairs, 1),
+        (
+            lambda reps, cfg: ngram_jaccard_pairs(
+                reps, id_col="id", text_col="text_norm", block_cols=()
+            )[0],
+            0,
+        ),
+    ],
+    ids=["candidate_table", "simhash_near_dup_pairs", "ngram_jaccard_pairs"],
+)
+def test_plan_counts_before_collect(spark, reps, build, udfs):
+    """Every bucket-pair join counts its buckets before it collects them:
+    the bucket-size window count sits below the collect_list, so no bucket
+    over the cap ever builds an array. The plan's Arrow UDF pass, where
+    there is one, runs once and feeds that count."""
+    plan = executed_plan(build(reps, DedupeConfig()))
     collect = next(
         n
         for n in plan_nodes(plan)
@@ -132,7 +145,7 @@ def test_candidate_table_plan_one_udf_count_before_collect(spark, reps):
         for n in plan_nodes(collect)
         if node_name(n) == "WindowExec" and "Count" in _window_functions(n)
     )
-    assert "ArrowEvalPythonExec" in [node_name(n) for n in plan_nodes(count)]
+    assert _arrow_udfs(plan) == _arrow_udfs(count) == udfs
 
 
 def test_simhash_pairs_plan_one_udf(spark, reps):

@@ -111,3 +111,38 @@ def test_fingerprints_disjoint_docs_share_nothing(spark):
         .count()
     )
     assert shared == 0
+
+
+def test_bucket_pairs_match_combinations_oracle(spark):
+    """Pairs and payload against itertools.combinations per bucket: buckets
+    of size 1, exactly cap and cap + 1 (dropped, listed in `dropped`), and
+    NULL keys, which group into one bucket as GROUP BY groups them."""
+    import itertools
+    from collections import Counter, defaultdict
+
+    from fuzzy_dedupe_pipeline_spark.lsh import bucket_pairs
+
+    cap = 4
+    sizes = {"one": 1, "pair": 2, "at_cap": cap, "over_cap": cap + 1, None: 3}
+    rows = [
+        (f"{key}-{i}", key, i * 10 + len(str(key)))
+        for key, n in sizes.items()
+        for i in reversed(range(n))  # unsorted input: the sort is bucket_pairs'
+    ]
+    df = spark.createDataFrame(rows, "id string, k string, v long")
+    pairs, dropped = bucket_pairs(df, ["k"], cap, ["v"])
+    assert pairs.columns == ["k", "id1", "id2", "v1", "v2"]
+
+    buckets = defaultdict(list)
+    for id_, k, v in rows:
+        buckets[k].append((id_, v))
+    want = Counter(
+        (k, a[0], b[0], a[1], b[1])
+        for k, members in buckets.items()
+        if len(members) <= cap
+        for a, b in itertools.combinations(sorted(members), 2)
+    )
+    got = Counter(tuple(r) for r in pairs.collect())
+    assert got == want
+    assert {r[0] for r in got} == {"pair", "at_cap", None}
+    assert [tuple(r) for r in dropped.collect()] == [("over_cap", cap + 1)]

@@ -146,64 +146,6 @@ def test_brute_force_topk_broadcasts_queries(spark):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
-def test_bucketed_band_self_join_no_shuffle(spark, tmp_path):
-    """Iceberg-analog bucketed band table: the candidate self-join on
-    band_hash must read both sides pre-partitioned — NO Exchange in the
-    join subtree (the bucket spec replaces the shuffle)."""
-    from fuzzy_dedupe_pipeline_spark.config import DedupeConfig
-    from fuzzy_dedupe_pipeline_spark.dataflow import clean_docs
-    from fuzzy_dedupe_pipeline_spark.minhash import with_signatures
-    from fuzzy_dedupe_pipeline_spark.tables import (
-        bucketed_candidate_pairs,
-        save_bucketed_bands,
-    )
-
-    cfg = DedupeConfig()
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    clean = clean_docs(docs, "doc_id", "text")
-    sigs = with_signatures(
-        clean.select(F.col("id").alias("url"), "text_norm"),
-        cfg,
-        id_col="url",
-        text_col="text_norm",
-    )
-    spark.sql("DROP TABLE IF EXISTS lsh_bands_test")
-    # a crashed earlier run can orphan the managed-table dir (not in the
-    # catalog, so DROP TABLE doesn't clean it) — remove it explicitly
-    import shutil
-
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    shutil.rmtree(f"{wh}/lsh_bands_test", ignore_errors=True)
-    save_bucketed_bands(sigs, cfg, table="lsh_bands_test", n_buckets=8)
-
-    pairs = bucketed_candidate_pairs(spark, cfg, table="lsh_bands_test")
-    # isolate the join subtree: project only the self-join (the dropDuplicates
-    # at the end legitimately shuffles on (id1, id2)); disable broadcast so
-    # the sf0.001-sized table can't sidestep the bucket-join path under test
-    bands = spark.table("lsh_bands_test")
-    left = bands.select("band_hash", F.col("id").alias("id1"))
-    right = bands.select("band_hash", F.col("id").alias("id2"))
-    joined = left.join(right, ["band_hash"]).filter(F.col("id1") < F.col("id2"))
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = _plan(joined)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-    assert "Exchange" not in plan, plan  # bucket spec eliminated the shuffle
-
-    # and the bucketed path agrees with the shuffle path pair-for-pair
-    from fuzzy_dedupe_pipeline_spark.lsh import candidate_pairs
-
-    want = {
-        (r.id1, r.id2) for r in candidate_pairs(sigs, cfg)[0].collect()
-    }
-    got = {(r.id1, r.id2) for r in pairs.collect()}
-    assert got == want
-    spark.sql("DROP TABLE IF EXISTS lsh_bands_test")
-
-
 def test_bpe_token_count_stays_jvm_side(spark):
     """The BPE-piece counter is one JVM projection over the scan — no Python
     evaluation node, no shuffle, only (doc_id, text) read. (The whitespace

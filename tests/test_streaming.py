@@ -10,6 +10,7 @@ can compare (id, cluster_id) sets directly.
 from __future__ import annotations
 
 import pytest
+from conftest import executed_plan, node_name, plan_nodes
 from pyspark.sql import functions as F
 
 from fuzzy_dedupe_pipeline_spark.config import DedupeConfig
@@ -949,3 +950,83 @@ def test_sharded_orphan_bloom_is_merged_not_deleted(spark, tmp_path):
     )
     out = inc.process_batch(b2, batch_id=2)
     assert {r["id"] for r in out.collect()} == {"u:new"}
+
+
+def _near_dup_batches(spark, n):
+    """Two batches: n distinct base docs, then a near-duplicate of each
+    (every batch-1 doc pairs with one store doc through the band probe)."""
+    base = [
+        (f"u:{i:03d}", f"page {i} " + f"topic{i} words about subject {i} " * 12)
+        for i in range(n)
+    ]
+    dups = [(f"{url}-dup", text + " edited") for url, text in base]
+    schema = "url string, text string"
+    return spark.createDataFrame(base, schema), spark.createDataFrame(dups, schema)
+
+
+@pytest.mark.parametrize(
+    "threshold, join",
+    [(None, "BroadcastHashJoinExec"), ("-1", "SortMergeJoinExec")],
+    ids=["default", "no_broadcast"],
+)
+def test_cross_probe_join_follows_threshold(
+    spark, tmp_path, monkeypatch, threshold, join
+):
+    """The batch-vs-store band probe carries no broadcast hint: the planner
+    broadcasts the batch's bands while they fit the threshold, and with
+    broadcasting off the probe is a shuffle join with the same rows."""
+    b0, b1 = _near_dup_batches(spark, 6)
+    probes: list = []
+    cls = type(b0)
+    checkpoint = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        if self.columns == ["id_old", "id_new"]:
+            probes.append(self)
+        return checkpoint(self, *args, **kwargs)
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    default = spark.conf.get(key)
+    inc = IncrementalDedupe(spark, str(tmp_path / "state"), CFG, n_label_buckets=8)
+    try:
+        if threshold is not None:
+            spark.conf.set(key, threshold)
+        inc.process_batch(b0, batch_id=0)
+        monkeypatch.setattr(cls, "localCheckpoint", spy)
+        out = {tuple(r) for r in inc.process_batch(b1, batch_id=1).collect()}
+        monkeypatch.undo()
+        labels = spark.read.parquet(inc.labels_path).select("id", "cluster_id")
+        labels = {tuple(r) for r in labels.collect()}
+    finally:
+        spark.conf.set(key, default)
+
+    [probe] = probes
+    joins = [
+        node_name(n)
+        for n in plan_nodes(executed_plan(probe))
+        if node_name(n).endswith("JoinExec")
+    ]
+    assert joins == [join]
+    assert out == {(f"u:{i:03d}-dup", f"u:{i:03d}", 1) for i in range(6)}
+    assert labels == {
+        (f"u:{i:03d}{s}", f"u:{i:03d}") for i in range(6) for s in ("", "-dup")
+    }
+
+
+def test_label_rewrite_one_file_per_bucket(spark, tmp_path):
+    """The label rewrite writes one data file per bucket dir: a bucket
+    rewritten from stored rows plus new ones is one task's output, not one
+    file per task that held its rows."""
+    import os
+
+    b0, b1 = _near_dup_batches(spark, 24)
+    inc = IncrementalDedupe(spark, str(tmp_path / "state"), CFG, n_label_buckets=8)
+    inc.process_batch(b0, batch_id=0)
+    inc.process_batch(b1, batch_id=1)
+    files = {
+        d: sum(f.endswith(".parquet") for f in os.listdir(f"{inc.labels_path}/{d}"))
+        for d in os.listdir(inc.labels_path)
+        if d.startswith("bucket=")
+    }
+    assert len(files) == 8
+    assert set(files.values()) == {1}, files
